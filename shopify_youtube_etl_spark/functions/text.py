@@ -38,33 +38,6 @@ def words(col: Column) -> Column:
     return F.split(F.trim(col), r"\s+")
 
 
-def word_shingles(col: Column, n: int = 3) -> Column:
-    """Distinct word n-gram shingles as array<string>, straight from a
-    text column.
-
-    PERF WARNING: each element access re-evaluates the inlined regex
-    split (O(len²) splits — measured 11× slower than the two-step
-    form).  Hot paths must materialize the words array first and use
-    ``shingles_from_words`` (see plans/llm_similarity.py).
-
-    Guarded so texts with < n words yield an empty array (Spark's
-    ``sequence(0, -k)`` would count *down*, so the when-guard is load-
-    bearing).  DuckDB equivalent:
-    ``list_distinct(list_transform(generate_series(1, len(w)-n+1),
-    i -> w[i] || ' ' || ... ))`` (empty series when len < n).
-    """
-    ws = words(col)
-    return F.when(
-        F.size(ws) >= n,
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(0), F.size(ws) - n),
-                lambda i: F.concat_ws(" ", *[F.element_at(ws, i + 1 + k) for k in range(n)]),
-            )
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-
-
 def shingles_from_words(ws_col: str, n: int = 3) -> Column:
     """Distinct word n-gram shingles from a MATERIALIZED words-array
     column (``df.select(words(text).alias(ws_col))`` first).

@@ -63,7 +63,3 @@ def dedup_keep_first(
     # dedup to their first arrival.
     return ranked.where(any_null | (F.col("__rn") == 1)).drop("__rn")
 
-
-def dedup_exact_rows(df: DataFrame) -> DataFrame:
-    """SELECT DISTINCT * (A4, shopify_etl.py:575) — full-row dedup."""
-    return df.distinct()

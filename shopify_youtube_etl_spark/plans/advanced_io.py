@@ -16,7 +16,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from shopify_youtube_etl_spark.plans.common import money, staging_dir as _staging_dir, t
+from shopify_youtube_etl_spark.plans.common import StateStore, money, staging_dir as _staging_dir, t
 from shopify_youtube_etl_spark.plans.registry import query
 
 
@@ -830,25 +830,17 @@ def stream_state_inspection(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate's state-store width is sized for the drain (8) rather
     than inherited from the batch session — fewer state files to
     commit AND to read back."""
-    from shopify_youtube_etl_spark.plans.common import (
-        mark_staged,
-        persistent_staging_dir,
-        staging_lock,
-    )
+    def stage(store) -> None:
+        (
+            t(spark, sf_dir, "events")
+            .select("user_id", "value")
+            .write.mode("overwrite")
+            .json(f"{store.path}/src")
+        )
 
-    tmp, staged = persistent_staging_dir("statereader", sf_dir)
+    with StateStore(spark, "statereader", sf_dir).open(stage) as store:
+        tmp = store.path
     src = f"{tmp}/src"
-    if not staged:
-        with staging_lock(tmp):  # double-checked: a peer may have staged
-            _, staged = persistent_staging_dir("statereader", sf_dir)
-            if not staged:
-                (
-                    t(spark, sf_dir, "events")
-                    .select("user_id", "value")
-                    .write.mode("overwrite")
-                    .json(src)
-                )
-                mark_staged(tmp)
     _sweep_spent_checkpoints(tmp)
     cp = f"{tmp}/cp_{uuid.uuid4().hex[:8]}"
 
@@ -923,43 +915,36 @@ def stream_stream_join_attribution(spark: SparkSession, sf_dir: str) -> DataFram
     the streams to completion and the emitted matches must value-hash
     against the batch interval join.
 
-    The NDJSON drop is staged ONCE per (host, sf_dir) — content-keyed
-    like the ANN artifacts — because re-landing the events on every
+    The NDJSON drop is staged ONCE per (host, corpus) in a StateStore
+    — like the ANN artifacts — because re-landing the events on every
     invocation was the only data-proportional cost of this query (r6
     verdict #8); repeat calls pay only the fixed streaming overhead
     (fresh checkpoint + the availableNow drain).  The checkpoint is
     per-invocation by necessity: reusing one would resume from committed
     offsets and emit nothing; spent ones are swept on entry."""
-    from shopify_youtube_etl_spark.plans.common import (
-        mark_staged,
-        persistent_staging_dir,
-        staging_lock,
-    )
     from shopify_youtube_etl_spark.plans.windows import interval_join_builder
 
-    tmp, staged = persistent_staging_dir("ssjoin", sf_dir)
+    def stage(store) -> None:
+        (
+            t(spark, sf_dir, "events")
+            .where(
+                F.col("ts").isNotNull()
+                & F.col("user_id").isNotNull()
+                & F.col("event_type").isNotNull()
+            )
+            .select(
+                "event_id",
+                "user_id",
+                "event_type",
+                F.unix_micros("ts").alias("ts_us"),
+            )
+            .write.mode("overwrite")
+            .json(f"{store.path}/src")
+        )
+
+    with StateStore(spark, "ssjoin", sf_dir).open(stage) as store:
+        tmp = store.path
     src = f"{tmp}/src"
-    if not staged:
-        with staging_lock(tmp):  # double-checked: a peer may have staged
-            _, staged = persistent_staging_dir("ssjoin", sf_dir)
-            if not staged:
-                (
-                    t(spark, sf_dir, "events")
-                    .where(
-                        F.col("ts").isNotNull()
-                        & F.col("user_id").isNotNull()
-                        & F.col("event_type").isNotNull()
-                    )
-                    .select(
-                        "event_id",
-                        "user_id",
-                        "event_type",
-                        F.unix_micros("ts").alias("ts_us"),
-                    )
-                    .write.mode("overwrite")
-                    .json(src)
-                )
-                mark_staged(tmp)
     _sweep_spent_checkpoints(tmp)
 
     def side(event_type: str) -> DataFrame:

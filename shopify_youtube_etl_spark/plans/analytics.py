@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from shopify_youtube_etl_spark.functions.text import words
-from shopify_youtube_etl_spark.plans.common import day_str, epoch_day, money, t, ts_str
+from shopify_youtube_etl_spark.plans.common import StateStore, day_str, epoch_day, money, t, ts_str
 from shopify_youtube_etl_spark.plans.registry import query
 
 # ---------------------------------------------------------------------------
@@ -5896,22 +5896,6 @@ def _ccl_split(spark: SparkSession, sf_dir: str) -> int:
     return int((mx + 1) * 4 // 5) if mx is not None else 0
 
 
-def _ccl_state(spark: SparkSession, sf_dir: str, split: int):
-    """Persisted (node, label) component state for the bulk co-purchase
-    graph, keyed by (corpus dir, split) like every other IVM state
-    store here."""
-    import hashlib
-    import os
-    import tempfile
-
-    from shopify_youtube_etl_spark.operators.upsert import ParquetTable
-
-    key = hashlib.md5(f"{sf_dir}|ccl|{split}".encode()).hexdigest()[:8]
-    return ParquetTable(
-        spark, os.path.join(tempfile.gettempdir(), f"sye_cclivm_{key}")
-    )
-
-
 def _bulk_star_edges(li: DataFrame) -> DataFrame:
     """Star edges of the bulk co-purchase graph for the given line
     set — shared by the full build and the batch path so increment and
@@ -5996,50 +5980,52 @@ def incremental_component_maintenance(spark: SparkSession, sf_dir: str) -> DataF
         .where(F.col("p_partkey").isNotNull())
         .select("p_partkey")
     )
-    state = _ccl_state(spark, sf_dir, split)
-    if state.current_manifest() is None:
+
+    def build(store) -> None:
         base = connected_components(
             _bulk_star_edges(li.where(F.col("o") < split)), nodes
         )
-        state.overwrite(base, stats_cols=["node"])
+        store["labels"].overwrite(base, stats_cols=["node"])
 
     batch_edges = _bulk_star_edges(li.where(F.col("o") >= split))
-    cur = state.read()
-    lab_of = lambda side: cur.select(  # noqa: E731 — two aliased probes
-        F.col("node").alias(side), F.col("label").alias(f"{side}_lab")
-    )
-    contracted = (
-        batch_edges.join(lab_of("src"), "src")
-        .join(lab_of("dst"), "dst")
-        .where(F.col("src_lab") != F.col("dst_lab"))
-        .select(F.col("src_lab").alias("src"), F.col("dst_lab").alias("dst"))
-        .distinct()
-    )
-    merged = connected_components(
-        contracted,
-        contracted.select(F.col("src").alias("n"))
-        .unionByName(contracted.select(F.col("dst").alias("n")))
-        .distinct(),
-    )
-    mapping = merged.where(F.col("node") != F.col("label")).select(
-        F.col("node").alias("old_label"), F.col("label").alias("new_label")
-    )
-    relabeled = (
-        cur.join(F.broadcast(mapping), cur["label"] == mapping["old_label"])
-        .select("node", F.col("new_label").alias("label"))
-    )
-    # Segment-pruned keyed MERGE (r7 verdict #1): only state segments
-    # whose node envelope a relabeled node actually hits are rewritten;
-    # every other (node, label) segment survives in the manifest by
-    # name — the write is O(touched segments + batch), matching the
-    # O(batch + touched components) compute.  An empty relabel batch
-    # (no merging edges) is a metadata no-op instead of a full rewrite.
-    state.upsert_matching(relabeled, ["node"], auto_compact_at=64)
+    with StateStore(spark, "cclivm", sf_dir, split).open(build) as store:
+        state = store["labels"]
+        cur = state.read()
+        lab_of = lambda side: cur.select(  # noqa: E731 — two aliased probes
+            F.col("node").alias(side), F.col("label").alias(f"{side}_lab")
+        )
+        contracted = (
+            batch_edges.join(lab_of("src"), "src")
+            .join(lab_of("dst"), "dst")
+            .where(F.col("src_lab") != F.col("dst_lab"))
+            .select(F.col("src_lab").alias("src"), F.col("dst_lab").alias("dst"))
+            .distinct()
+        )
+        merged = connected_components(
+            contracted,
+            contracted.select(F.col("src").alias("n"))
+            .unionByName(contracted.select(F.col("dst").alias("n")))
+            .distinct(),
+        )
+        mapping = merged.where(F.col("node") != F.col("label")).select(
+            F.col("node").alias("old_label"), F.col("label").alias("new_label")
+        )
+        relabeled = (
+            cur.join(F.broadcast(mapping), cur["label"] == mapping["old_label"])
+            .select("node", F.col("new_label").alias("label"))
+        )
+        # Segment-pruned keyed MERGE (r7 verdict #1): only state segments
+        # whose node envelope a relabeled node actually hits are rewritten;
+        # every other (node, label) segment survives in the manifest by
+        # name — the write is O(touched segments + batch), matching the
+        # O(batch + touched components) compute.  An empty relabel batch
+        # (no merging edges) is a metadata no-op instead of a full rewrite.
+        state.upsert_matching(relabeled, ["node"], auto_compact_at=64)
 
-    sizes = state.read().groupBy("label").agg(F.count("*").alias("component_size"))
-    return sizes.groupBy("component_size").agg(
-        F.count("*").alias("n_components")
-    )
+        sizes = state.read().groupBy("label").agg(F.count("*").alias("component_size"))
+        return sizes.groupBy("component_size").agg(
+            F.count("*").alias("n_components")
+        )
 
 
 def _ccd_split(spark: SparkSession, sf_dir: str) -> int:
@@ -6051,19 +6037,6 @@ def _ccd_split(spark: SparkSession, sf_dir: str) -> int:
 
     mx = table_col_max(spark, sf_dir, "lineitem", "l_orderkey")
     return int((mx + 1) * 9 // 10) if mx is not None else 0
-
-
-def _ccd_state(spark: SparkSession, sf_dir: str, split: int):
-    import hashlib
-    import os
-    import tempfile
-
-    from shopify_youtube_etl_spark.operators.upsert import ParquetTable
-
-    key = hashlib.md5(f"{sf_dir}|ccd|{split}".encode()).hexdigest()[:8]
-    return ParquetTable(
-        spark, os.path.join(tempfile.gettempdir(), f"sye_ccdivm_{key}")
-    )
 
 
 @query(
@@ -6148,10 +6121,10 @@ def incremental_component_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("p_partkey").isNotNull())
         .select("p_partkey")
     )
-    state = _ccd_state(spark, sf_dir, dsplit)
-    if state.current_manifest() is None:
+
+    def build(store) -> None:
         full = connected_components(_bulk_star_edges(li), nodes)
-        state.overwrite(full, stats_cols=["node"])
+        store["labels"].overwrite(full, stats_cols=["node"])
 
     # Surviving edges are consumed twice (anti-join probe + touched-
     # subgraph filter): checkpoint once so the star derivation runs once.
@@ -6159,36 +6132,38 @@ def incremental_component_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = _bulk_star_edges(li.where(F.col("o") >= dsplit))
     deleted = cand.join(keep_edges, ["src", "dst"], "left_anti")
 
-    cur = state.read()
-    touched_labels = (
-        deleted.select(F.col("src").alias("node"))
-        .unionByName(deleted.select(F.col("dst").alias("node")))
-        .distinct()
-        .join(cur, "node")
-        .select("label")
-        .distinct()
-        .localCheckpoint()  # two consumers: member pull + edge filter
-    )
-    touched_nodes = cur.join(F.broadcast(touched_labels), "label").select("node")
-    sub_edges = (
-        keep_edges.join(
-            cur.select(F.col("node").alias("src"), F.col("label").alias("src_lab")),
-            "src",
+    with StateStore(spark, "ccdivm", sf_dir, dsplit).open(build) as store:
+        state = store["labels"]
+        cur = state.read()
+        touched_labels = (
+            deleted.select(F.col("src").alias("node"))
+            .unionByName(deleted.select(F.col("dst").alias("node")))
+            .distinct()
+            .join(cur, "node")
+            .select("label")
+            .distinct()
+            .localCheckpoint()  # two consumers: member pull + edge filter
         )
-        .join(
-            F.broadcast(touched_labels.withColumnRenamed("label", "src_lab")),
-            "src_lab",
-            "left_semi",
+        touched_nodes = cur.join(F.broadcast(touched_labels), "label").select("node")
+        sub_edges = (
+            keep_edges.join(
+                cur.select(F.col("node").alias("src"), F.col("label").alias("src_lab")),
+                "src",
+            )
+            .join(
+                F.broadcast(touched_labels.withColumnRenamed("label", "src_lab")),
+                "src_lab",
+                "left_semi",
+            )
+            .select("src", "dst")
         )
-        .select("src", "dst")
-    )
-    relabeled = connected_components(sub_edges, touched_nodes)
-    state.upsert_matching(relabeled, ["node"], auto_compact_at=64)
+        relabeled = connected_components(sub_edges, touched_nodes)
+        state.upsert_matching(relabeled, ["node"], auto_compact_at=64)
 
-    sizes = state.read().groupBy("label").agg(F.count("*").alias("component_size"))
-    return sizes.groupBy("component_size").agg(
-        F.count("*").alias("n_components")
-    )
+        sizes = state.read().groupBy("label").agg(F.count("*").alias("component_size"))
+        return sizes.groupBy("component_size").agg(
+            F.count("*").alias("n_components")
+        )
 
 
 # ---------------------------------------------------------------------------

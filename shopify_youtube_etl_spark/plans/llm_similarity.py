@@ -20,7 +20,7 @@ from shopify_youtube_etl_spark.functions.similarity import (
     minhash_signature,
 )
 from shopify_youtube_etl_spark.functions.text import shingles_from_words, words
-from shopify_youtube_etl_spark.plans.common import spread, t
+from shopify_youtube_etl_spark.plans.common import StateStore, spread, t
 from shopify_youtube_etl_spark.plans.registry import query
 
 # Shared DuckDB fragments.
@@ -1446,32 +1446,18 @@ def embedding_norm_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 # PERSISTED as a ParquetTable — the engine's own transactional format —
 # and the search queries READ the stored artifact instead of refitting
 # per call.  Mirrors the bpe_train_merges / bpe_encode_stats pattern.
+# Each artifact kind is one StateStore (family "ann", the kind as its
+# slice) holding a "model" table.
 
 _PQ_M, _PQ_KSUB, _PQ_ITERS = 8, 64, 10  # subspaces, centroids/subspace, Lloyd rounds
 _IVF_K = 16
 
 
-def _ann_artifact_table(spark: SparkSession, sf_dir: str, kind: str):
-    """Persistent (NOT cleared-on-reuse like staging_dir) artifact table
-    keyed by (corpus dir, layout version), so a later search call in the
-    same environment finds the trained model — but a bumped
-    ``common.STATE_LAYOUT_VERSION`` (changed quantizer layout, code
-    schema, or training semantics) resolves to a fresh directory and
-    retrains instead of silently serving an incompatible artifact; the
-    stale directory is orphaned for /tmp cleanup (r9 verdict #6)."""
-    import hashlib
-    import os
-    import tempfile
-
-    from shopify_youtube_etl_spark.operators.upsert import ParquetTable
-    from shopify_youtube_etl_spark.plans import common
-
-    key = hashlib.md5(
-        f"{sf_dir}|v{common.STATE_LAYOUT_VERSION}".encode()
-    ).hexdigest()[:8]
-    return ParquetTable(
-        spark, os.path.join(tempfile.gettempdir(), f"sye_ann_{kind}_{key}")
-    )
+def _model_rows(store) -> list[dict]:
+    """An ANN store's model rows, read with pyarrow (model-sized, no
+    Spark job); empty when the build found no vectors to train on."""
+    tbl = store["model"]
+    return tbl.read_rows() if tbl.exists() else []
 
 
 def _fit_pq_codebooks(spark: SparkSession, sf_dir: str):
@@ -1503,29 +1489,37 @@ def _fit_pq_codebooks(spark: SparkSession, sf_dir: str):
 
 
 def _load_or_train_pq(spark: SparkSession, sf_dir: str):
-    """Stored codebooks if present and shape-compatible, else train +
-    persist.  Re-running search after pq_train_codebooks skips the
-    sample collect and the Lloyd loop entirely."""
+    """Stored codebooks, trained and persisted by the first caller.
+    Re-running search after pq_train_codebooks skips the sample
+    collect and the Lloyd loop entirely.  None on an empty corpus."""
+
+    def train(store) -> None:
+        cb = _fit_pq_codebooks(spark, sf_dir)
+        if cb is not None:
+            store["model"].overwrite(_pq_frame(spark, cb))
+
+    with StateStore(spark, "ann", sf_dir, "pq").open(train) as store:
+        rows = _model_rows(store)
+    return _pq_codebooks(rows)
+
+
+def _pq_codebooks(rows: list[dict]):
+    """Codebook artifact rows as an (M, KSUB, dsub) ndarray; None when
+    there is no model (empty corpus)."""
     import numpy as np
 
-    tbl = _ann_artifact_table(spark, sf_dir, "pq")
-    if tbl.exists():
-        rows = tbl.read_rows()  # model-sized: M·KSUB tiny rows, pyarrow (no job)
-        if len(rows) == _PQ_M * _PQ_KSUB:
-            dsub = len(rows[0]["centroid_vec"])
-            cb = np.empty((_PQ_M, _PQ_KSUB, dsub), dtype=np.float64)
-            for r in rows:
-                cb[r["subspace"], r["centroid"]] = r["centroid_vec"]
-            return cb
-    cb = _fit_pq_codebooks(spark, sf_dir)
-    if cb is not None:
-        _persist_pq(spark, tbl, cb)
+    if not rows:
+        return None
+    dsub = len(rows[0]["centroid_vec"])
+    cb = np.empty((_PQ_M, _PQ_KSUB, dsub), dtype=np.float64)
+    for r in rows:
+        cb[r["subspace"], r["centroid"]] = r["centroid_vec"]
     return cb
 
 
-def _persist_pq(spark: SparkSession, tbl, codebooks, centers_fp: str | None = None) -> DataFrame:
-    """Persist codebooks; ``centers_fp`` (IVF-PQ only) binds the rows to
-    the coarse-quantizer generation they explain."""
+def _pq_frame(spark: SparkSession, codebooks, centers_fp: str | None = None) -> DataFrame:
+    """Codebooks as artifact rows; ``centers_fp`` (IVF-PQ only) binds
+    the rows to the coarse-quantizer generation they explain."""
     if centers_fp is None:
         rows = [
             (m, k, [float(x) for x in codebooks[m, k]])
@@ -1540,9 +1534,7 @@ def _persist_pq(spark: SparkSession, tbl, codebooks, centers_fp: str | None = No
             for k in range(_PQ_KSUB)
         ]
         schema = "subspace int, centroid int, centroid_vec array<double>, centers_fp string"
-    df = spark.createDataFrame(rows, schema)
-    tbl.overwrite(df)
-    return df
+    return spark.createDataFrame(rows, schema)
 
 
 @query(
@@ -1565,8 +1557,8 @@ def pq_train_codebooks(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.createDataFrame(
             [], "subspace int, centroid int, centroid_norm double"
         )
-    tbl = _ann_artifact_table(spark, sf_dir, "pq")
-    df = _persist_pq(spark, tbl, cb)
+    df = _pq_frame(spark, cb)
+    StateStore(spark, "ann", sf_dir, "pq").rebuild(lambda st: st["model"].overwrite(df))
     return df.select(
         "subspace",
         "centroid",
@@ -1600,25 +1592,22 @@ def _fit_ivf_centroids(spark: SparkSession, sf_dir: str):
 
 
 def _load_or_train_ivf(spark: SparkSession, sf_dir: str):
-    tbl = _ann_artifact_table(spark, sf_dir, "ivf")
-    if tbl.exists():
+    def train(store) -> None:
+        centers = _fit_ivf_centroids(spark, sf_dir)
+        if centers is not None:
+            store["model"].overwrite(_ivf_frame(spark, centers))
+
+    with StateStore(spark, "ann", sf_dir, "ivf").open(train) as store:
         # Quantizer-sized (K=16 rows): pyarrow driver read, no Spark job.
-        recs = sorted(tbl.read_rows(), key=lambda r: r["cell"])
-        if len(recs) == _IVF_K:
-            return [list(r["centroid_vec"]) for r in recs]
-    centers = _fit_ivf_centroids(spark, sf_dir)
-    if centers is not None:
-        _persist_ivf(spark, tbl, centers)
-    return centers
+        recs = _model_rows(store)
+    return [list(r["centroid_vec"]) for r in sorted(recs, key=lambda r: r["cell"])] or None
 
 
-def _persist_ivf(spark: SparkSession, tbl, centers) -> DataFrame:
-    df = spark.createDataFrame(
+def _ivf_frame(spark: SparkSession, centers) -> DataFrame:
+    return spark.createDataFrame(
         [(i, c) for i, c in enumerate(centers)],
         "cell int, centroid_vec array<double>",
     )
-    tbl.overwrite(df)
-    return df
 
 
 @query(
@@ -1637,8 +1626,8 @@ def ivf_train_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     centers = _fit_ivf_centroids(spark, sf_dir)
     if centers is None:
         return spark.createDataFrame([], "cell int, centroid_norm double")
-    tbl = _ann_artifact_table(spark, sf_dir, "ivf")
-    df = _persist_ivf(spark, tbl, centers)
+    df = _ivf_frame(spark, centers)
+    StateStore(spark, "ann", sf_dir, "ivf").rebuild(lambda st: st["model"].overwrite(df))
     return df.select(
         "cell",
         F.round(
@@ -1834,46 +1823,41 @@ def _load_or_train_ivfpq(
     to."""
     import numpy as np
 
-    tbl = _ann_artifact_table(spark, sf_dir, kind)
     want_fp = _centers_fingerprint(centers)
-    if tbl.exists():
-        rows = tbl.read_rows()  # model-sized, pyarrow (no Spark job)
-        if (
-            len(rows) == _PQ_M * _PQ_KSUB
-            and "centers_fp" in rows[0]
-            and rows[0]["centers_fp"] == want_fp
-        ):
-            dsub = len(rows[0]["centroid_vec"])
-            cb = np.empty((_PQ_M, _PQ_KSUB, dsub), dtype=np.float64)
-            for r in rows:
-                cb[r["subspace"], r["centroid"]] = r["centroid_vec"]
-            return cb
-    e = t(spark, sf_dir, "embeddings").where(F.col("embedding").isNotNull())
-    if below_id is not None:
-        e = e.where(F.col("vec_id") < below_id)
-    train_rows = e.orderBy("vec_id").limit(2048).select("embedding").collect()
-    if not train_rows:
-        return None
-    C = np.asarray(centers, dtype=np.float64)
-    T = np.array([r["embedding"] for r in train_rows], dtype=np.float64)
-    T = T / np.linalg.norm(T, axis=1, keepdims=True)
-    cells = ((T[:, None, :] - C[None, :, :]) ** 2).sum(axis=2).argmin(axis=1)
-    R = T - C[cells]  # residuals — what the codebooks must explain
-    dsub = R.shape[1] // _PQ_M
-    codebooks = np.empty((_PQ_M, _PQ_KSUB, dsub), dtype=np.float64)
-    for m in range(_PQ_M):
-        X = R[:, m * dsub : (m + 1) * dsub]
-        Cm = X[np.linspace(0, len(X) - 1, _PQ_KSUB, dtype=int)].copy()
-        for _ in range(_PQ_ITERS):
-            d2 = ((X[:, None, :] - Cm[None, :, :]) ** 2).sum(axis=2)
-            assign = d2.argmin(axis=1)
-            for k in range(_PQ_KSUB):
-                pts = X[assign == k]
-                if len(pts):
-                    Cm[k] = pts.mean(axis=0)
-        codebooks[m] = Cm
-    _persist_pq(spark, tbl, codebooks, centers_fp=want_fp)
-    return codebooks
+
+    def train(store) -> None:
+        e = t(spark, sf_dir, "embeddings").where(F.col("embedding").isNotNull())
+        if below_id is not None:
+            e = e.where(F.col("vec_id") < below_id)
+        train_rows = e.orderBy("vec_id").limit(2048).select("embedding").collect()
+        if not train_rows:
+            return
+        C = np.asarray(centers, dtype=np.float64)
+        T = np.array([r["embedding"] for r in train_rows], dtype=np.float64)
+        T = T / np.linalg.norm(T, axis=1, keepdims=True)
+        cells = ((T[:, None, :] - C[None, :, :]) ** 2).sum(axis=2).argmin(axis=1)
+        R = T - C[cells]  # residuals — what the codebooks must explain
+        dsub = R.shape[1] // _PQ_M
+        codebooks = np.empty((_PQ_M, _PQ_KSUB, dsub), dtype=np.float64)
+        for m in range(_PQ_M):
+            X = R[:, m * dsub : (m + 1) * dsub]
+            Cm = X[np.linspace(0, len(X) - 1, _PQ_KSUB, dtype=int)].copy()
+            for _ in range(_PQ_ITERS):
+                d2 = ((X[:, None, :] - Cm[None, :, :]) ** 2).sum(axis=2)
+                assign = d2.argmin(axis=1)
+                for k in range(_PQ_KSUB):
+                    pts = X[assign == k]
+                    if len(pts):
+                        Cm[k] = pts.mean(axis=0)
+            codebooks[m] = Cm
+        store["model"].overwrite(_pq_frame(spark, codebooks, want_fp))
+
+    with StateStore(spark, "ann", sf_dir, kind).open(train) as store:
+        rows = _model_rows(store)
+        if rows and rows[0]["centers_fp"] != want_fp:
+            train(store)  # centroids retrained since: retrain the codebooks
+            rows = _model_rows(store)
+    return _pq_codebooks(rows)
 
 
 @query(
@@ -2139,69 +2123,65 @@ def _load_or_train_ivf_base(spark: SparkSession, sf_dir: str, split: int):
     boundary rebuilds instead of silently pairing old base stats with
     a different append slice.  Returns (centers, stats_df) or (None,
     None) on an empty base."""
-    tbl = _ann_artifact_table(spark, sf_dir, f"ivfbase{split}")
-    if tbl.exists():
-        # Quantizer-sized artifact (K=16 rows): pyarrow driver read —
-        # no Spark job on the warm path; the stats frame rebuilds as a
-        # local relation with the identical rows/schema.
-        recs = sorted(tbl.read_rows(), key=lambda r: r["cell"])
-        if len(recs) == _IVF_K:
-            stats = spark.createDataFrame(
-                [
-                    (
-                        r["cell"],
-                        list(r["centroid_vec"]),
-                        r["n_base"],
-                        r["mean_sqdist_base"],
-                    )
-                    for r in recs
-                ],
-                "cell int, centroid_vec array<double>, n_base long, "
-                "mean_sqdist_base double",
-            )
-            return [list(r["centroid_vec"]) for r in recs], stats
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
 
-    base = (
-        t(spark, sf_dir, "embeddings")
-        .where(F.col("embedding").isNotNull() & (F.col("vec_id") < split))
-        .select("vec_id", as_double_array("embedding").alias("v"))
-    )
-    ml_df = base.select(array_to_vector("v").alias("features"))
-    if not ml_df.head(1):
+    def train(store) -> None:
+        from pyspark.ml.clustering import KMeans
+        from pyspark.ml.functions import array_to_vector
+
+        base = (
+            t(spark, sf_dir, "embeddings")
+            .where(F.col("embedding").isNotNull() & (F.col("vec_id") < split))
+            .select("vec_id", as_double_array("embedding").alias("v"))
+        )
+        ml_df = base.select(array_to_vector("v").alias("features"))
+        if not ml_df.head(1):
+            return
+        model = KMeans(k=_IVF_K, seed=42, maxIter=10).fit(ml_df)
+        centers = [list(map(float, c)) for c in model.clusterCenters()]
+        dists = _ivf_dists(centers)
+        stats = (
+            base.select(
+                (F.array_position(dists, F.array_min(dists)) - 1)
+                .cast("int")
+                .alias("cell"),
+                F.array_min(dists).alias("d"),
+            )
+            .groupBy("cell")
+            .agg(
+                F.count("*").cast("long").alias("n_base"),
+                F.avg("d").alias("mean_sqdist_base"),
+            )
+        )
+        cdf = spark.createDataFrame(
+            [(i, c) for i, c in enumerate(centers)],
+            "cell int, centroid_vec array<double>",
+        )
+        # A cell can own zero base vectors (k-means keeps the centroid);
+        # coalesce so the artifact always has exactly _IVF_K rows.
+        store["model"].overwrite(
+            cdf.join(stats, "cell", "left").select(
+                "cell",
+                "centroid_vec",
+                F.coalesce("n_base", F.lit(0)).cast("long").alias("n_base"),
+                F.coalesce("mean_sqdist_base", F.lit(0.0)).alias("mean_sqdist_base"),
+            )
+        )
+
+    with StateStore(spark, "ann", sf_dir, f"ivfbase{split}").open(train) as store:
+        # Quantizer-sized artifact (K=16 rows): pyarrow driver read, no
+        # Spark job; the stats frame is a local relation of its rows.
+        recs = _model_rows(store)
+    if not recs:
         return None, None
-    model = KMeans(k=_IVF_K, seed=42, maxIter=10).fit(ml_df)
-    centers = [list(map(float, c)) for c in model.clusterCenters()]
-    dists = _ivf_dists(centers)
-    stats = (
-        base.select(
-            (F.array_position(dists, F.array_min(dists)) - 1)
-            .cast("int")
-            .alias("cell"),
-            F.array_min(dists).alias("d"),
-        )
-        .groupBy("cell")
-        .agg(
-            F.count("*").cast("long").alias("n_base"),
-            F.avg("d").alias("mean_sqdist_base"),
-        )
+    recs.sort(key=lambda r: r["cell"])
+    stats = spark.createDataFrame(
+        [
+            (r["cell"], list(r["centroid_vec"]), r["n_base"], r["mean_sqdist_base"])
+            for r in recs
+        ],
+        "cell int, centroid_vec array<double>, n_base long, mean_sqdist_base double",
     )
-    cdf = spark.createDataFrame(
-        [(i, c) for i, c in enumerate(centers)],
-        "cell int, centroid_vec array<double>",
-    )
-    # A cell can own zero base vectors (k-means keeps the centroid);
-    # coalesce so the artifact always has exactly _IVF_K rows.
-    tbl.overwrite(
-        cdf.join(stats, "cell", "left").select(
-            "cell",
-            "centroid_vec",
-            F.coalesce("n_base", F.lit(0)).cast("long").alias("n_base"),
-            F.coalesce("mean_sqdist_base", F.lit(0.0)).alias("mean_sqdist_base"),
-        )
-    )
-    return centers, tbl.read()
+    return [list(r["centroid_vec"]) for r in recs], stats
 
 
 @query(
@@ -2407,20 +2387,46 @@ def ivf_hot_cell_split(spark: SparkSession, sf_dir: str) -> DataFrame:
       no data-sized pandas group anywhere, so a billion-row hot cell
       never materializes in one task (r6 verdict #2);
     * children land in the ``ivfsplit`` artifact (parent cell, child
-      id, centroid, member count) — search composes cold parents +
+      id, centroid, member count, parent and child errors), built once
+      per corpus and read back as this report — search composes cold parents +
       children; recall over the composed quantizer is pinned in
       tests/test_llm_ops.py alongside the no-silent-retrain pin on the
       base artifact."""
+    rows = _ivf_split_rows(spark, sf_dir)
+    return spark.createDataFrame(
+        [
+            (
+                r["cell"],
+                r["child"],
+                r["n_members"],
+                round(r["mean_sqdist_parent"], 6),
+                round(r["mean_sqdist_child"], 6),
+            )
+            for r in rows
+        ],
+        "cell int, child int, n_members long, "
+        "mean_sqdist_parent double, mean_sqdist_child double",
+    ).orderBy("cell", "child")
+
+
+def _ivf_split_rows(spark: SparkSession, sf_dir: str) -> list[dict]:
+    """Rows of the ``ivfsplit`` artifact (one per child of a split
+    cell), built by the first caller; empty when no cell is hot."""
+    split = _ivf_append_split(spark, sf_dir)
+    with StateStore(spark, "ann", sf_dir, f"ivfsplit{split}").open(
+        lambda st: _split_hot_cells(spark, sf_dir, split, st)
+    ) as store:
+        return _model_rows(store)
+
+
+def _split_hot_cells(spark: SparkSession, sf_dir: str, split: int, store) -> None:
+    """Build of the ``ivfsplit`` artifact: bisect every hot cell of the
+    base quantizer (see ivf_hot_cell_split)."""
     import numpy as np
 
-    split = _ivf_append_split(spark, sf_dir)
-    out_schema = (
-        "cell int, child int, n_members long, "
-        "mean_sqdist_parent double, mean_sqdist_child double"
-    )
     centers, _base_stats = _load_or_train_ivf_base(spark, sf_dir, split)
     if centers is None:
-        return spark.createDataFrame([], out_schema)
+        return
 
     e = (
         t(spark, sf_dir, "embeddings")
@@ -2459,7 +2465,7 @@ def ivf_hot_cell_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         > _SPLIT_SKEW * overall_growth
     }
     if not hot:
-        return spark.createDataFrame([], out_schema)
+        return
 
     from pyspark.sql import Window
 
@@ -2515,8 +2521,8 @@ def ivf_hot_cell_split(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("dd"),
         )
     )
-    # One bounded materialization (<= 2K rows) feeds both the persisted
-    # artifact and the report — the split must not run twice.
+    # One bounded materialization (<= 2K rows) carries the children and
+    # the report columns, so the split runs once per corpus.
     child_rows = (
         labeled.groupBy("cell", "child")
         .agg(
@@ -2525,8 +2531,7 @@ def ivf_hot_cell_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .collect()
     )
-    tbl = _ann_artifact_table(spark, sf_dir, f"ivfsplit{split}")
-    tbl.overwrite(
+    store["model"].overwrite(
         spark.createDataFrame(
             [
                 (
@@ -2534,25 +2539,15 @@ def ivf_hot_cell_split(spark: SparkSession, sf_dir: str) -> DataFrame:
                     r["child"],
                     child_centroids[r["cell"]][r["child"]],
                     r["n_members"],
+                    hot[r["cell"]],
+                    r["mean_sqdist_child"],
                 )
                 for r in child_rows
             ],
-            "cell int, child int, centroid_vec array<double>, n_members long",
+            "cell int, child int, centroid_vec array<double>, n_members long, "
+            "mean_sqdist_parent double, mean_sqdist_child double",
         )
     )
-    return spark.createDataFrame(
-        [
-            (
-                r["cell"],
-                r["child"],
-                r["n_members"],
-                round(hot[r["cell"]], 6),
-                round(r["mean_sqdist_child"], 6),
-            )
-            for r in child_rows
-        ],
-        out_schema,
-    ).orderBy("cell", "child")
 
 
 @query(
@@ -2590,29 +2585,56 @@ def ivfpq_code_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate over that persisted state — one data pass total, and the
     artifact IS the proof the next reader needs (codes bound to the
     split generation by the artifact key)."""
+    codes = _ivf_split_codes(spark, sf_dir)
+    if codes is None:
+        return spark.createDataFrame(
+            [],
+            "cell int, child int, n_vectors long, "
+            "mean_resid_parent double, mean_resid_child double, "
+            "mean_err_parent double, mean_err_child double",
+        )
+    return (
+        codes.groupBy("cell", "child")
+        .agg(
+            F.count("*").alias("n_vectors"),
+            F.round(F.avg("resid_parent"), 6).alias("mean_resid_parent"),
+            F.round(F.avg("resid_child"), 6).alias("mean_resid_child"),
+            F.round(F.avg("err_parent"), 6).alias("mean_err_parent"),
+            F.round(F.avg("err_child"), 6).alias("mean_err_child"),
+        )
+        .orderBy("cell", "child")
+    )
+
+
+def _ivf_split_codes(spark: SparkSession, sf_dir: str) -> DataFrame | None:
+    """The ``ivfsplitcodes`` artifact (refreshed codes of the split
+    cells' members), built by the first caller; None when no cell was
+    split."""
+    split = _ivf_append_split(spark, sf_dir)
+    with StateStore(spark, "ann", sf_dir, f"ivfsplitcodes{split}").open(
+        lambda st: _refresh_split_codes(spark, sf_dir, split, st)
+    ) as store:
+        return store["model"].read() if store["model"].exists() else None
+
+
+def _refresh_split_codes(spark: SparkSession, sf_dir: str, split: int, store) -> None:
+    """Build of the ``ivfsplitcodes`` artifact: re-encode the split
+    cells' members against their child centroids (see
+    ivfpq_code_refresh)."""
     import numpy as np
     import pandas as pd
 
-    split = _ivf_append_split(spark, sf_dir)
-    out_schema = (
-        "cell int, child int, n_vectors long, "
-        "mean_resid_parent double, mean_resid_child double, "
-        "mean_err_parent double, mean_err_child double"
-    )
     centers, _ = _load_or_train_ivf_base(spark, sf_dir, split)
     if centers is None:
-        return spark.createDataFrame([], out_schema)
-    split_tbl = _ann_artifact_table(spark, sf_dir, f"ivfsplit{split}")
-    if not split_tbl.exists():
-        ivf_hot_cell_split(spark, sf_dir).collect()
-    child_rows = split_tbl.read_rows() if split_tbl.exists() else []  # <= 2K rows, pyarrow
+        return
+    child_rows = _ivf_split_rows(spark, sf_dir)  # <= 2K rows, pyarrow
     if not child_rows:
-        return spark.createDataFrame([], out_schema)
+        return
     codebooks = _load_or_train_ivfpq(
         spark, sf_dir, centers, kind=f"ivfpqbase{split}", below_id=split
     )
     if codebooks is None:
-        return spark.createDataFrame([], out_schema)
+        return
 
     C = np.asarray(centers, dtype=np.float64)
     M = _PQ_M
@@ -2686,20 +2708,7 @@ def ivfpq_code_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
         "resid_parent double, resid_child double, "
         "err_parent double, err_child double",
     )
-    codes_tbl = _ann_artifact_table(spark, sf_dir, f"ivfsplitcodes{split}")
-    codes_tbl.overwrite(refreshed)
-    return (
-        codes_tbl.read()
-        .groupBy("cell", "child")
-        .agg(
-            F.count("*").alias("n_vectors"),
-            F.round(F.avg("resid_parent"), 6).alias("mean_resid_parent"),
-            F.round(F.avg("resid_child"), 6).alias("mean_resid_child"),
-            F.round(F.avg("err_parent"), 6).alias("mean_err_parent"),
-            F.round(F.avg("err_child"), 6).alias("mean_err_child"),
-        )
-        .orderBy("cell", "child")
-    )
+    store["model"].overwrite(refreshed)
 
 
 @query(
@@ -3245,43 +3254,48 @@ def ann_erasure_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     incident-sized erasure touches a handful of segments."""
     split = _ivf_append_split(spark, sf_dir)
     out_schema = "cell int, child int, n_before long, n_erased long, n_after long"
-    codes_tbl = _ann_artifact_table(spark, sf_dir, f"ivfsplitcodes{split}")
-    if not codes_tbl.exists():
-        ivfpq_code_refresh(spark, sf_dir).collect()
-    if not codes_tbl.exists():
+    codes = _ivf_split_codes(spark, sf_dir)
+    if codes is None:
         return spark.createDataFrame([], out_schema)
-    codes = codes_tbl.read().select("vec_id", "cell", "child")
+    codes = codes.select("vec_id", "cell", "child")
     bounds = codes.agg(
         F.min("vec_id").alias("lo"), F.max("vec_id").alias("hi")
     ).first()
     if bounds["lo"] is None:
         return spark.createDataFrame([], out_schema)
     mid = (bounds["lo"] + bounds["hi"]) // 2 + 1
-    demo = _ann_artifact_table(spark, sf_dir, f"ivferasure{split}")
-    demo.truncate(schema_source=codes)
-    demo.append(codes.where(F.col("vec_id") < mid), stats_cols=["vec_id"])
-    demo.append(codes.where(F.col("vec_id") >= mid), stats_cols=["vec_id"])
-    before = demo.read().groupBy("cell", "child").agg(
-        F.count("*").alias("n_before")
-    )
-    tombstones = codes.where(
-        (F.col("vec_id") % 97 == 3) & (F.col("vec_id") >= mid)
-    ).select("vec_id")
-    demo.delete_matching(tombstones, "vec_id")
-    after = demo.read().groupBy("cell", "child").agg(F.count("*").alias("n_after"))
-    return (
-        before.join(after, ["cell", "child"], "left")
-        .select(
-            "cell",
-            "child",
-            "n_before",
-            (F.col("n_before") - F.coalesce("n_after", F.lit(0)))
-            .cast("long")
-            .alias("n_erased"),
-            F.coalesce("n_after", F.lit(0)).cast("long").alias("n_after"),
+    # The demo table is reset by every call: the reset, the erasure and
+    # the (<= 2K-row) report all run under the store's lock, so a
+    # concurrent call cannot retire the segments the report reads.
+    with StateStore(spark, "ann", sf_dir, f"ivferasure{split}").open(
+        lambda st: None
+    ) as store:
+        demo = store["model"]
+        demo.truncate(schema_source=codes)
+        demo.append(codes.where(F.col("vec_id") < mid), stats_cols=["vec_id"])
+        demo.append(codes.where(F.col("vec_id") >= mid), stats_cols=["vec_id"])
+        before = demo.read().groupBy("cell", "child").agg(
+            F.count("*").alias("n_before")
         )
-        .orderBy("cell", "child")
-    )
+        tombstones = codes.where(
+            (F.col("vec_id") % 97 == 3) & (F.col("vec_id") >= mid)
+        ).select("vec_id")
+        demo.delete_matching(tombstones, "vec_id")
+        after = demo.read().groupBy("cell", "child").agg(F.count("*").alias("n_after"))
+        report = (
+            before.join(after, ["cell", "child"], "left")
+            .select(
+                "cell",
+                "child",
+                "n_before",
+                (F.col("n_before") - F.coalesce("n_after", F.lit(0)))
+                .cast("long")
+                .alias("n_erased"),
+                F.coalesce("n_after", F.lit(0)).cast("long").alias("n_after"),
+            )
+            .collect()
+        )
+    return spark.createDataFrame(report, out_schema).orderBy("cell", "child")
 
 
 @query(

@@ -25,7 +25,7 @@ from shopify_youtube_etl_spark.functions.text import (
 from shopify_youtube_etl_spark.functions.similarity import (
     double_literal as _double_literal,
 )
-from shopify_youtube_etl_spark.plans.common import spread, t
+from shopify_youtube_etl_spark.plans.common import StateStore, spread, t
 from shopify_youtube_etl_spark.plans.registry import query
 
 # DuckDB fragments mirroring functions/text.py helpers.
@@ -2209,147 +2209,21 @@ def _funnel_split(spark: SparkSession, sf_dir: str) -> int:
     return int((mx + 1) * 4 // 5) if mx is not None else 0
 
 
-def _marker_current(marker) -> bool:
-    """A terminal marker blesses a state only when it exists AND was
-    stamped by the CURRENT layout version: completeness alone is not
-    compatibility — state persisted by older code (different banding,
-    hashing, or schema conventions) must rebuild, not be reused
-    (r9 verdict #6).  A marker without the ``layout_version`` column
-    (pre-versioning builds) is treated as stale for the same reason.
-
-    The marker is a one-row table, so it is read with pyarrow straight
-    off the committed segment files — the same rows a Spark read of the
-    manifest would return, without paying a Spark job on every
-    warm-path probe (two probes per incremental query per run)."""
-    import os
-
-    import pyarrow.parquet as pq
-
-    from shopify_youtube_etl_spark.plans import common
-
-    if not marker.exists():
-        return False
-    for seg in marker.segments():
-        for f in sorted(os.listdir(seg)):
-            if not f.endswith(".parquet"):
-                continue
-            tbl = pq.read_table(os.path.join(seg, f))
-            if tbl.num_rows == 0:
-                continue
-            if "layout_version" not in tbl.column_names:
-                return False
-            v = tbl.column("layout_version")[0].as_py()
-            return v == common.STATE_LAYOUT_VERSION
-    return False
-
-
-def _materialize_funnel_state(
-    spark: SparkSession, st: dict, marker_path: str, stamp: tuple, build
-) -> None:
-    """Check → wipe → build → mark, behind a TERMINAL marker and the
-    state lock.  The nine state tables commit through independent
-    per-table manifests — there is no cross-table transaction — so
-    probing one table's existence (the old guard) wedges permanently if
-    a build dies between table commits: the probe says "built" while
-    later tables are missing.  Instead the marker, written only after
-    the LAST table commits, is the single durable commit point; any
-    state without it (first run OR torn build/advance) is wiped and
-    rebuilt from scratch — crash-safe by restart, with no
-    partial-repair reasoning to get wrong.  The marker row additionally
-    carries ``common.STATE_LAYOUT_VERSION``: a marker stamped by an
-    older layout is stale even though complete, so a code change that
-    bumps the version wipes and rebuilds instead of silently reusing
-    incompatible state (see _marker_current; rebuild-on-bump is pinned
-    in tests/test_llm_ops.py).
-
-    The whole sequence runs under an exclusive flock (the
-    ``ParquetTable._commit`` discipline, same single-host scope — note
-    that unlike ``_commit`` there is no O_EXCL backstop here, so on
-    mounts where flock is advisory-broken (some NFS) two drivers could
-    interleave wipe and build; acceptable for the documented
-    single-host scope): the destructive wipe must not interleave with
-    another driver's live build, or the loser's rmtree tears tables the
-    winner already committed and the marker then blesses a torn state
-    forever.  The marker is re-probed INSIDE the lock, so the blocked
-    second caller returns instead of rebuilding again."""
-    import fcntl
-    import shutil
-
-    from shopify_youtube_etl_spark.operators.upsert import ParquetTable
-    from shopify_youtube_etl_spark.plans import common
-
-    marker = ParquetTable(spark, marker_path)
-    # Pre-lock fast path: UNLOCKED, so a concurrent rebuilder between
-    # its marker rmtree and the re-stamp can tear the parquet read out
-    # from under us (ADVICE r10).  Any read error here just means "not
-    # current" — fall through to the flock, where the inside-lock probe
-    # is the authoritative one.
-    try:
-        if _marker_current(marker):
-            return
-    except Exception:  # noqa: BLE001 — torn/vanishing files under a live rebuild
-        pass
-    with open(marker_path + ".lock", "w") as lk:
-        fcntl.flock(lk, fcntl.LOCK_EX)
-        if _marker_current(marker):
-            return
-        for tbl in st.values():
-            shutil.rmtree(tbl.path, ignore_errors=True)
-        # A stale-version marker must not bless the new build mid-flight:
-        # wipe it too, so a crash anywhere inside build() leaves an
-        # UNMARKED state (wipe-and-rebuild on retry), never an old marker
-        # paired with half-new tables.
-        shutil.rmtree(marker.path, ignore_errors=True)
-        build()
-        rows, schema = stamp
-        marker = ParquetTable(spark, marker_path)
-        marker.overwrite(
-            spark.createDataFrame(rows, schema).withColumn(
-                "layout_version",
-                F.lit(common.STATE_LAYOUT_VERSION).cast("long"),
-            )
-        )
-
-
-def _ensure_funnel_state(spark: SparkSession, sf_dir: str, st: dict, split: int) -> None:
-    _materialize_funnel_state(
-        spark,
-        st,
-        st["meta"].path + "_built",
-        ([(int(split),)], "split long"),
-        lambda: _build_funnel_state(spark, sf_dir, st, split),
-    )
-
-
-def _funnel_state(spark: SparkSession, sf_dir: str, split: int | str) -> dict:
-    """The funnel's persisted state store — one ParquetTable per
-    structure a production incremental curator keeps warm between
-    batches, keyed by (corpus dir, split) — same convention as the ANN
-    artifact tables, with the split in the key so a moved boundary
-    rebuilds instead of pairing old history state with a different
-    batch slice."""
-    import hashlib
-    import os
-    import tempfile
-
-    from shopify_youtube_etl_spark.operators.upsert import ParquetTable
-
-    key = hashlib.md5(f"{sf_dir}|{split}".encode()).hexdigest()[:8]
-    base = os.path.join(tempfile.gettempdir(), f"sye_funnel_{key}")
-    return {
-        k: ParquetTable(spark, f"{base}_{k}")
-        for k in (
-            "meta",      # per-stage (stage_name, n_docs, total_tokens) for ingest/quality
-            "digests",   # exact-dedup digest set of history quality survivors
-            "toks",      # (doc_id, n_tokens) per history exact survivor
-            "bands",     # (doc_id, band_id, band_hash) LSH index of history survivors
-            "edges",     # verified near-dup edges within history
-            "labels",    # (node, label) history component labels
-            "bench_sh",  # distinct benchmark shingle hashes seen so far
-            "postings",  # (doc_id, sh_hash, k) inverted index of survivor shingles
-            "cstat",     # (doc_id, n_sh, hits) contamination stats vs history bench
-        )
-    }
+# The funnel's persisted state: one table per structure a production
+# incremental curator keeps warm between batches, in a StateStore keyed
+# by (corpus, split) so a moved boundary rebuilds instead of pairing old
+# history state with a different batch slice.
+_FUNNEL_TABLES = (
+    "meta",      # per-stage (stage_name, n_docs, total_tokens) for ingest/quality
+    "digests",   # exact-dedup digest set of history quality survivors
+    "toks",      # (doc_id, n_tokens) per history exact survivor
+    "bands",     # (doc_id, band_id, band_hash) LSH index of history survivors
+    "edges",     # verified near-dup edges within history
+    "labels",    # (node, label) history component labels
+    "bench_sh",  # distinct benchmark shingle hashes seen so far
+    "postings",  # (doc_id, sh_hash, k) inverted index of survivor shingles
+    "cstat",     # (doc_id, n_sh, hits) contamination stats vs history bench
+)
 
 
 def _funnel_quality_pred():
@@ -2378,7 +2252,7 @@ def _funnel_stage_row(n: int, name: str, df: DataFrame) -> DataFrame:
     )
 
 
-def _build_funnel_state(spark: SparkSession, sf_dir: str, st: dict, split: int) -> None:
+def _build_funnel_state(spark: SparkSession, sf_dir: str, st: StateStore, split: int) -> None:
     """One-time history curation: runs the funnel's quality → exact →
     LSH → components → decontam stages over the history slice and
     persists every reusable structure.  Deliberately the same
@@ -2534,21 +2408,22 @@ def incremental_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     are mis-tuned for the slice and both paths are in the documented
     degraded mode."""
     split = _funnel_split(spark, sf_dir)
-    st = _funnel_state(spark, sf_dir, split)
-    _ensure_funnel_state(spark, sf_dir, st, split)
-    # eager=False: this path only REPORTS (no state advance follows),
-    # so the four batch checkpoints can materialize inside their first
-    # consumer's job instead of as four serial driver barriers —
-    # profiled at ~2s of pure driver gaps per rep at sf0.1.  The
-    # advance paths keep eager checkpoints: their lineage reads state
-    # tables that the advance overwrites afterwards (r12 §16 A/B).
-    return _funnel_stage_rows(
-        _funnel_batch(spark, sf_dir, st, split, None, eager=False)
-    )
+    with StateStore(spark, "funnel", sf_dir, split).open(
+        lambda st: _build_funnel_state(spark, sf_dir, st, split)
+    ) as st:
+        # eager=False: this path only REPORTS (no state advance follows),
+        # so the four batch checkpoints can materialize inside their first
+        # consumer's job instead of as four serial driver barriers —
+        # profiled at ~2s of pure driver gaps per rep at sf0.1.  The
+        # advance paths keep eager checkpoints: their lineage reads state
+        # tables that the advance overwrites afterwards (r12 §16 A/B).
+        return _funnel_stage_rows(
+            _funnel_batch(spark, sf_dir, st, split, None, eager=False)
+        )
 
 
 def _funnel_batch(
-    spark: SparkSession, sf_dir: str, st: dict, lo: int, hi: int | None,
+    spark: SparkSession, sf_dir: str, st: StateStore, lo: int, hi: int | None,
     eager: bool = True,
 ) -> dict:
     """One ingestion batch (lo ≤ doc_id < hi) curated against the
@@ -2879,7 +2754,7 @@ def _append_delta(table, df: DataFrame, stats_cols: list[str]) -> None:
     table.append(delta, stats_cols=stats_cols, auto_compact_at=64)
 
 
-def _advance_funnel_state(dst: dict, fr: dict) -> None:
+def _advance_funnel_state(dst: StateStore, fr: dict) -> None:
     """COMMIT a curated batch into the state store — what a production
     curator does after every report, so the next batch curates against
     history-plus-this-batch instead of re-deriving it.  Every structure
@@ -2980,8 +2855,8 @@ def incremental_funnel_two_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     bridges two historical components, which must persist into
     batch 2's collapse.  The advance COMMITS IN PLACE with the pruned
     verbs (append of disjoint deltas, keyed merges for labels/cstat) —
-    O(batch + touched segments), never O(state) — and durability is a
-    TERMINAL marker under a state key carrying the slice boundaries:
+    O(batch + touched segments), never O(state) — and durability is
+    the StateStore's marker under a key carrying the slice boundaries:
     a marked state is reused as-is, an unmarked one (first run or a
     crash anywhere in build/advance) is wiped and rebuilt, and the
     mid-advance crash window is additionally bounded by the advance's
@@ -2991,34 +2866,29 @@ def incremental_funnel_two_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     s2 = _funnel_split(spark, sf_dir)
     mx = table_col_max(spark, sf_dir, "documents", "doc_id")
     s1 = int((mx + 1) * 3 // 5) if mx is not None else 0
-    # TERMINAL marker via the shared protocol (_materialize_funnel_state),
-    # written only after build AND advance both committed — a crash
-    # anywhere between the first and last per-table commit leaves a
-    # state no retry can repair in place (a retry's deltas recompute
-    # against whichever tables already absorbed the batch — e.g.
-    # digests committed but toks not would silently drop the batch's
-    # token rows forever), so an unmarked state is wiped and rebuilt.
-    # The per-advance commit ORDER (digests first, meta last) still
-    # bounds what a mid-advance crash can tear — pinned by the
+    # The store's marker is written only after build AND advance both
+    # committed — a crash anywhere between the first and last per-table
+    # commit leaves a state no retry can repair in place (a retry's
+    # deltas recompute against whichever tables already absorbed the
+    # batch — e.g. digests committed but toks not would silently drop
+    # the batch's token rows forever), so an unmarked state is wiped and
+    # rebuilt.  The per-advance commit ORDER (digests first, meta last)
+    # still bounds what a mid-advance crash can tear — pinned by the
     # crash-at-meta retry test — but the marker, not retry reasoning,
     # is what the query's correctness rests on.
-    st_b = _funnel_state(spark, sf_dir, f"adv{s1}-{s2}")
+    def build_and_advance(st) -> None:
+        _build_funnel_state(spark, sf_dir, st, s1)
+        _advance_funnel_state(st, _funnel_batch(spark, sf_dir, st, s1, s2))
 
-    def build_and_advance() -> None:
-        _build_funnel_state(spark, sf_dir, st_b, s1)
-        _advance_funnel_state(st_b, _funnel_batch(spark, sf_dir, st_b, s1, s2))
-
-    _materialize_funnel_state(
-        spark,
-        st_b,
-        st_b["meta"].path + "_advanced",
-        ([(s1, s2)], "lo long, hi long"),
-        build_and_advance,
-    )
-    # Report-only final batch (the advance above already committed its
-    # writes before these frames are built) — same laziness as the
-    # single-batch report path.
-    return _funnel_stage_rows(_funnel_batch(spark, sf_dir, st_b, s2, None, eager=False))
+    with StateStore(spark, "funnel", sf_dir, f"adv{s1}-{s2}").open(
+        build_and_advance
+    ) as st_b:
+        # Report-only final batch (the advance above already committed its
+        # writes before these frames are built) — same laziness as the
+        # single-batch report path.
+        return _funnel_stage_rows(
+            _funnel_batch(spark, sf_dir, st_b, s2, None, eager=False)
+        )
 
 
 @query(
@@ -3195,30 +3065,6 @@ def collated_cross_source_census(spark: SparkSession, sf_dir: str) -> DataFrame:
 # IS the maintenance-correctness proof.
 # ---------------------------------------------------------------------------
 
-def _bm25_index_tables(spark: SparkSession, sf_dir: str, split: int) -> dict:
-    """Persisted inverted-index state, keyed by (corpus dir, split,
-    layout version) — the _funnel_state convention: a moved boundary OR
-    a bumped ``common.STATE_LAYOUT_VERSION`` resolves to a fresh
-    directory and rebuilds, instead of pairing stale postings with a
-    different batch slice or a changed tokenization/schema (the stale
-    directory is orphaned for /tmp cleanup)."""
-    import hashlib
-    import os
-    import tempfile
-
-    from shopify_youtube_etl_spark.operators.upsert import ParquetTable
-    from shopify_youtube_etl_spark.plans import common
-
-    key = hashlib.md5(
-        f"{sf_dir}|bm25|{split}|v{common.STATE_LAYOUT_VERSION}".encode()
-    ).hexdigest()[:8]
-    base = os.path.join(tempfile.gettempdir(), f"sye_bm25idx_{key}")
-    return {
-        k: ParquetTable(spark, f"{base}_{k}")
-        for k in ("postings", "doclen")  # (doc_id, token, tf) / (doc_id, dlen)
-    }
-
-
 def _index_rows(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
     """One explode pass reduced to the two index relations.
 
@@ -3298,18 +3144,8 @@ def bm25_incremental_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "text")
     )
     split = _funnel_split(spark, sf_dir)
-    idx = _bm25_index_tables(spark, sf_dir, split)
 
-    # Guard on BOTH manifests: the two base overwrites commit
-    # independently, so a build that died between them must rebuild —
-    # probing only postings would wedge every retry on doclen.read().
-    # Both writes are idempotent overwrites (and the batch merge below
-    # is a keyed no-op on re-application), so rebuild-on-partial heals
-    # without a marker.
-    if (
-        idx["postings"].current_manifest() is None
-        or idx["doclen"].current_manifest() is None
-    ):
+    def build(idx) -> None:
         base_tf, _ = _index_rows(docs.where(F.col("doc_id") < split))
         idx["postings"].overwrite(base_tf, stats_cols=["doc_id"])
         # Norms FROM the committed postings (dlen = Σ tf per doc, exact
@@ -3337,11 +3173,11 @@ def bm25_incremental_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     # >= split while the base index segments record doc_id < split, so
     # in steady state the base postings/norms survive in the manifest
     # by name and the merge writes O(batch postings), never O(index).
-    idx["postings"].upsert_matching(batch_tf, ["doc_id", "token"], auto_compact_at=64)
-    idx["doclen"].upsert_matching(batch_dl, ["doc_id"], auto_compact_at=64)
-
-    dl = idx["doclen"].read()
-    tf = idx["postings"].read().where(F.col("token").isin(terms))
+    with StateStore(spark, "bm25idx", sf_dir, split).open(build) as idx:
+        idx["postings"].upsert_matching(batch_tf, ["doc_id", "token"], auto_compact_at=64)
+        idx["doclen"].upsert_matching(batch_dl, ["doc_id"], auto_compact_at=64)
+        dl = idx["doclen"].read()
+        tf = idx["postings"].read().where(F.col("token").isin(terms))
     scored = _bm25_score_frame(tf, dl)
     return scored.orderBy(F.col("bm25").desc(), F.col("doc_id")).limit(10)
 

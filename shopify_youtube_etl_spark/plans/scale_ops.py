@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from shopify_youtube_etl_spark.operators.scale import prefilter_join, salted_join
-from shopify_youtube_etl_spark.plans.common import money, t
+from shopify_youtube_etl_spark.plans.common import StateStore, money, t
 from shopify_youtube_etl_spark.plans.registry import query
 
 
@@ -424,19 +424,6 @@ def _hll_split(spark: SparkSession, sf_dir: str) -> int:
     return int((mx + 1) * 4 // 5) if mx is not None else 0
 
 
-def _hll_state_table(spark: SparkSession, sf_dir: str, split: int):
-    import hashlib
-    import os
-    import tempfile
-
-    from shopify_youtube_etl_spark.operators.upsert import ParquetTable
-
-    key = hashlib.md5(f"{sf_dir}|{split}".encode()).hexdigest()[:8]
-    return ParquetTable(
-        spark, os.path.join(tempfile.gettempdir(), f"sye_hllstate_{key}")
-    )
-
-
 @query(
     "incremental_hll_maintenance",
     ref="sketch-state IVM — the incremental_rollup_maintenance pattern applied to MERGEABLE SKETCHES: per-day HLL state + batch-delta sketches unioned, never a raw re-scan; exact estimate equality with the full recompute pinned in pytest (HLL union is associative)",
@@ -465,23 +452,23 @@ def incremental_hll_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     from shopify_youtube_etl_spark.plans.common import day_str
 
     split = _hll_split(spark, sf_dir)
-    st = _hll_state_table(spark, sf_dir, split)
-    if not st.exists():
-        hist = (
-            t(spark, sf_dir, "events")
-            .where(F.col("event_id") < split)
-            .select(day_str(F.col("ts")).alias("day"), "user_id")
+
+    def day_sketches(ev):
+        return (
+            ev.select(day_str(F.col("ts")).alias("day"), "user_id")
             .groupBy("day")
             .agg(F.hll_sketch_agg("user_id").alias("sk"))
         )
-        st.overwrite(hist, stats_cols=["day"])
-    batch = (
-        t(spark, sf_dir, "events")
-        .where(F.col("event_id") >= split)
-        .select(day_str(F.col("ts")).alias("day"), "user_id")
-        .groupBy("day")
-        .agg(F.hll_sketch_agg("user_id").alias("sk"))
-    )
+
+    events = t(spark, sf_dir, "events")
+    batch = day_sketches(events.where(F.col("event_id") >= split))
+
+    def build(store) -> None:
+        store["sketches"].overwrite(
+            day_sketches(events.where(F.col("event_id") < split)),
+            stats_cols=["day"],
+        )
+
     # True sketch-state IVM (r7 verdict #1): union the batch's delta
     # sketches with the persisted sketches FOR THE BATCH'S DAYS ONLY
     # (broadcast semi join — batch-bounded), then MERGE just those day
@@ -490,33 +477,22 @@ def incremental_hll_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     # is O(batch days), never O(history days) — and because HLL union
     # is idempotent (re-unioning the same users leaves the registers
     # unchanged), re-running the merge is a no-op by value.
-    touched = (
-        st.read()
-        .join(F.broadcast(batch.select("day")), "day", "left_semi")
-        .select("day", "sk")
-        .unionByName(batch)
-        .groupBy("day")
-        .agg(F.hll_union_agg("sk").alias("sk"))
-    )
-    st.upsert_matching(touched, ["day"], auto_compact_at=64)
-    return (
-        st.read()
-        .select("day", F.hll_sketch_estimate("sk").cast("long").alias("users_est"))
-        .orderBy("day")
-    )
-
-
-def _kll_state_table(spark: SparkSession, sf_dir: str, split: int):
-    import hashlib
-    import os
-    import tempfile
-
-    from shopify_youtube_etl_spark.operators.upsert import ParquetTable
-
-    key = hashlib.md5(f"{sf_dir}|kll|{split}".encode()).hexdigest()[:8]
-    return ParquetTable(
-        spark, os.path.join(tempfile.gettempdir(), f"sye_kllstate_{key}")
-    )
+    with StateStore(spark, "hllstate", sf_dir, split).open(build) as store:
+        st = store["sketches"]
+        touched = (
+            st.read()
+            .join(F.broadcast(batch.select("day")), "day", "left_semi")
+            .select("day", "sk")
+            .unionByName(batch)
+            .groupBy("day")
+            .agg(F.hll_union_agg("sk").alias("sk"))
+        )
+        st.upsert_matching(touched, ["day"], auto_compact_at=64)
+        return (
+            st.read()
+            .select("day", F.hll_sketch_estimate("sk").cast("long").alias("users_est"))
+            .orderBy("day")
+        )
 
 
 @query(
@@ -549,7 +525,6 @@ def incremental_kll_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     from shopify_youtube_etl_spark.plans.common import day_str
 
     split = _hll_split(spark, sf_dir)  # same 80% event-id convention
-    st = _kll_state_table(spark, sf_dir, split)
 
     def day_sketches(ev, batch_id: int):
         return (
@@ -563,28 +538,29 @@ def incremental_kll_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(F.lit(batch_id).cast("long").alias("batch_id"), "day", "sk", "n")
         )
 
-    if not st.exists():
-        hist = day_sketches(
-            t(spark, sf_dir, "events").where(F.col("event_id") < split), -1
-        )
-        st.overwrite(hist, stats_cols=["batch_id"])
+    events = t(spark, sf_dir, "events")
 
-    batch = day_sketches(
-        t(spark, sf_dir, "events").where(F.col("event_id") >= split), split
-    )
-    st.upsert_matching(batch, ["batch_id", "day"], auto_compact_at=64)
-
-    merged = (
-        st.read()
-        .groupBy("day")
-        .agg(
-            F.expr("kll_merge_agg_double(sk)").alias("msk"),
-            F.sum("n").alias("n_events"),
+    def build(store) -> None:
+        store["partials"].overwrite(
+            day_sketches(events.where(F.col("event_id") < split), -1),
+            stats_cols=["batch_id"],
         )
-    )
-    return merged.select(
-        "day",
-        "n_events",
-        F.round(F.expr("kll_sketch_get_quantile_double(msk, 0.5)"), 4).alias("p50"),
-        F.round(F.expr("kll_sketch_get_quantile_double(msk, 0.95)"), 4).alias("p95"),
-    ).orderBy("day")
+
+    batch = day_sketches(events.where(F.col("event_id") >= split), split)
+    with StateStore(spark, "kllstate", sf_dir, split).open(build) as store:
+        st = store["partials"]
+        st.upsert_matching(batch, ["batch_id", "day"], auto_compact_at=64)
+        merged = (
+            st.read()
+            .groupBy("day")
+            .agg(
+                F.expr("kll_merge_agg_double(sk)").alias("msk"),
+                F.sum("n").alias("n_events"),
+            )
+        )
+        return merged.select(
+            "day",
+            "n_events",
+            F.round(F.expr("kll_sketch_get_quantile_double(msk, 0.5)"), 4).alias("p50"),
+            F.round(F.expr("kll_sketch_get_quantile_double(msk, 0.95)"), 4).alias("p95"),
+        ).orderBy("day")

@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from shopify_youtube_etl_spark.plans.common import money, t
+from shopify_youtube_etl_spark.plans.common import StateStore, money, t
 from shopify_youtube_etl_spark.plans.registry import query
 
 
@@ -507,24 +507,6 @@ def _attr_split(spark: SparkSession, sf_dir: str) -> int:
     return int((mx + 1) * 4 // 5) if mx is not None else 0
 
 
-def _attr_state(spark: SparkSession, sf_dir: str, split: int) -> "object":
-    """Persisted credited-touch state for attribution IVM — one
-    ParquetTable of (pid, cid, click_hour, value, n) rows, keyed by
-    (corpus dir, split) like the funnel/BM25/IVF state stores so a
-    moved boundary rebuilds instead of pairing stale history with a
-    different batch slice."""
-    import hashlib
-    import os
-    import tempfile
-
-    from shopify_youtube_etl_spark.operators.upsert import ParquetTable
-
-    key = hashlib.md5(f"{sf_dir}|attr|{split}".encode()).hexdigest()[:8]
-    return ParquetTable(
-        spark, os.path.join(tempfile.gettempdir(), f"sye_attrivm_{key}")
-    )
-
-
 def _attr_touches(purchases: DataFrame, clicks: DataFrame) -> DataFrame:
     """Credited-touch rows for the given purchase set against the given
     click set: the 30-minute interval join plus the per-purchase touch
@@ -612,9 +594,9 @@ def incremental_attribution_revenue(spark: SparkSession, sf_dir: str) -> DataFra
         F.col("user_id").alias("cu"),
         F.col("ts").alias("cts"),
     )
-    state = _attr_state(spark, sf_dir, split)
-    if state.current_manifest() is None:
-        state.overwrite(
+
+    def build(store) -> None:
+        store["touches"].overwrite(
             _attr_touches(p.where(F.col("pid") < split), c.where(F.col("cid") < split)),
             stats_cols=["pid"],
         )
@@ -637,14 +619,15 @@ def incremental_attribution_revenue(spark: SparkSession, sf_dir: str) -> DataFra
     # an updated purchase actually hits rewrite; in steady state the
     # history segment (pid < split) survives by name unless an old
     # purchase was re-credited into it.
-    state.upsert_matching(updates, ["pid", "cid"], auto_compact_at=64)
-
-    return (
-        state.read()
-        .groupBy(F.col("click_hour").cast("int").alias("click_hour"))
-        .agg(
-            F.count("*").alias("n_touches"),
-            F.countDistinct("pid").alias("n_purchases"),
-            money(F.sum(F.col("value") / F.col("n"))).alias("attributed_revenue"),
+    with StateStore(spark, "attrivm", sf_dir, split).open(build) as store:
+        state = store["touches"]
+        state.upsert_matching(updates, ["pid", "cid"], auto_compact_at=64)
+        return (
+            state.read()
+            .groupBy(F.col("click_hour").cast("int").alias("click_hour"))
+            .agg(
+                F.count("*").alias("n_touches"),
+                F.countDistinct("pid").alias("n_purchases"),
+                money(F.sum(F.col("value") / F.col("n"))).alias("attributed_revenue"),
+            )
         )
-    )

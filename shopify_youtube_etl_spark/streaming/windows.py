@@ -21,7 +21,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
 
 from shopify_youtube_etl_spark.operators.upsert import ParquetTable
-from shopify_youtube_etl_spark.plans.windows import tumbling_agg
 
 
 def read_event_stream(
@@ -31,12 +30,6 @@ def read_event_stream(
     return (
         spark.readStream.schema(schema).json(path).withWatermark("ts", watermark_delay)
     )
-
-
-def streaming_tumbling_counts(events: DataFrame, width: str = "15 minutes") -> DataFrame:
-    """Same builder as the batch query ⇒ same results under
-    ``Trigger.AvailableNow`` (verified in tests/test_streaming.py)."""
-    return tumbling_agg(events, width)
 
 
 def streaming_dedup(events: DataFrame, keys: list[str]) -> DataFrame:

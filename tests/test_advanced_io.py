@@ -228,42 +228,3 @@ def test_pagestore_pruned_query_plan_and_parity(spark, sf_dir):
     }
     got = {(r["lang"], r["n_docs"], r["total_chars"]) for r in df.collect()}
     assert got == want
-
-
-def test_persistent_staging_fingerprint_invalidates_on_corpus_change(tmp_path):
-    """ADVICE r7: the _STAGED marker must bind to the corpus CONTENT
-    (file names/sizes/mtimes), not just the path — regenerating the
-    corpus in place at the same path must invalidate the stage, and a
-    legacy 'ok' marker (pre-fingerprint) must re-stage once."""
-    import os
-
-    from shopify_youtube_etl_spark.plans.common import (
-        mark_staged,
-        persistent_staging_dir,
-        staging_lock,
-    )
-
-    corpus = tmp_path / "sfX"
-    corpus.mkdir()
-    (corpus / "events.parquet").write_bytes(b"v1-payload")
-
-    d, staged = persistent_staging_dir("fptest", str(corpus))
-    assert not staged
-    with staging_lock(d):
-        mark_staged(d)
-    _, staged = persistent_staging_dir("fptest", str(corpus))
-    assert staged, "marker written but stage not recognized"
-
-    # Regenerate the corpus in place: different size -> stale stage.
-    (corpus / "events.parquet").write_bytes(b"v2-payload-different-size")
-    _, staged = persistent_staging_dir("fptest", str(corpus))
-    assert not staged, "regenerated corpus served a stale stage"
-    mark_staged(d)
-    _, staged = persistent_staging_dir("fptest", str(corpus))
-    assert staged
-
-    # Legacy pre-fingerprint marker: treated as stale exactly once.
-    with open(os.path.join(d, "_STAGED"), "w") as fh:
-        fh.write("ok\n")
-    _, staged = persistent_staging_dir("fptest", str(corpus))
-    assert not staged

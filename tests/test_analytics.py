@@ -9,6 +9,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from shopify_youtube_etl_spark.plans.common import StateStore
 from shopify_youtube_etl_spark.plans.registry import all_queries
 from tests.test_plans import explain_str as _plan
 
@@ -310,7 +311,7 @@ def test_incremental_attribution_matches_live_and_consumes_state(spark, sf_dir):
     # The batch merge refreshes only new/affected purchases, so at
     # least the unaffected history rows must surface the poison.
     split = W._attr_split(spark, sf_dir)
-    state = W._attr_state(spark, sf_dir, split)
+    state = StateStore(spark, "attrivm", sf_dir, split)["touches"]
     poisoned = state.read().withColumn(
         "value",
         F.when(F.col("pid") < split, F.lit(0.0)).otherwise(F.col("value")),
@@ -454,7 +455,7 @@ def test_incremental_components_bridge_and_poison(spark, sf_dir, tmp_path):
 
     # Poison: move one node of a size-1 component onto another label.
     split = A._ccl_split(spark, sf_dir)
-    state = A._ccl_state(spark, sf_dir, split)
+    state = StateStore(spark, "cclivm", sf_dir, split)["labels"]
     rows = state.read().collect()
     by_label = {}
     for r in rows:
@@ -577,7 +578,7 @@ def test_incremental_component_delete_splits_and_consumes_state(
     # would resurrect it.  (Poisoning a TOUCHED component would
     # legitimately self-heal — that's the recompute working.)
     dsplit = A._ccd_split(spark, str(tmp_path))
-    state = A._ccd_state(spark, str(tmp_path), dsplit)
+    state = StateStore(spark, "ccdivm", str(tmp_path), dsplit)["labels"]
     state.overwrite(state.read().where(F.col("node") != 6))
     assert census(str(tmp_path)) == [(2, 1), (3, 1)], (
         "dropped untouched node was rebuilt from raw edges"

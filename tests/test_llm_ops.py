@@ -20,7 +20,13 @@ from shopify_youtube_etl_spark.functions.similarity import (
     minhash_signature,
 )
 from shopify_youtube_etl_spark.functions.text import shingles_from_words, words
+from shopify_youtube_etl_spark.plans.common import StateStore
 from shopify_youtube_etl_spark.sources.tables import load_table
+
+
+def _ann_model(spark, sf_dir, kind):
+    """The model table of one persisted ANN artifact kind."""
+    return StateStore(spark, "ann", sf_dir, kind)["model"]
 
 
 @pytest.fixture(scope="module")
@@ -632,8 +638,8 @@ def test_ann_train_apply_split_persists_and_reuses(spark, sf_dir):
     assert len(pq_model) == sim._PQ_M * sim._PQ_KSUB
     ivf_model = specs["ivf_train_centroids"].fn(spark, sf_dir).collect()
     assert len(ivf_model) == sim._IVF_K
-    assert sim._ann_artifact_table(spark, sf_dir, "pq").exists()
-    assert sim._ann_artifact_table(spark, sf_dir, "ivf").exists()
+    assert _ann_model(spark, sf_dir, "pq").exists()
+    assert _ann_model(spark, sf_dir, "ivf").exists()
 
     boom = mock.Mock(side_effect=AssertionError("search refit the model"))
     with mock.patch.object(sim, "_fit_pq_codebooks", boom), mock.patch.object(
@@ -646,7 +652,7 @@ def test_ann_train_apply_split_persists_and_reuses(spark, sf_dir):
     # Retrain is one re-run away, and the overwrite keeps history:
     # the artifact table retains the previous generation (rollback).
     specs["pq_train_codebooks"].fn(spark, sf_dir).count()
-    assert len(sim._ann_artifact_table(spark, sf_dir, "pq").history()) >= 2
+    assert len(_ann_model(spark, sf_dir, "pq").history()) >= 2
 
 
 def test_curation_funnel_monotone_and_removes_planted_dups(spark, sf_dir, tmp_path):
@@ -801,7 +807,7 @@ def test_ivfpq_codebooks_bound_to_centroid_generation(spark, sf_dir):
     centers = sim._fit_ivf_centroids(spark, sf_dir)
     assert centers is not None
     cb1 = sim._load_or_train_ivfpq(spark, sf_dir, centers)
-    tbl = sim._ann_artifact_table(spark, sf_dir, "ivfpq")
+    tbl = _ann_model(spark, sf_dir, "ivfpq")
     # Latest generation id, not history length: retention caps the
     # generation list, so on a warm artifact dir an overwrite adds one
     # AND vacuums one — length is not a rewrite detector, the id is.
@@ -959,11 +965,11 @@ def test_funnel_advance_write_is_o_batch(spark, tmp_path):
     # Batch 1 = first two chain links: they join A's component (label
     # stays 10 = the min) without reaching B, so no history node moves.
     d = _plant_funnel_corpus(spark, tmp_path, batch1_ids=[300, 315])
-    st = lt._funnel_state(spark, d, "adv-pin")
+    st = StateStore(spark, "funnel", d, "adv-pin")
     lt._build_funnel_state(spark, d, st, 288)
     pre = {
         k: {os.path.basename(s) for s in st[k].segments()}
-        for k in st
+        for k in lt._FUNNEL_TABLES
         if k != "meta"
     }
     lt._advance_funnel_state(st, lt._funnel_batch(spark, d, st, 288, 384))
@@ -986,7 +992,7 @@ def test_funnel_advance_demotion_merges_only_moved_labels(spark, tmp_path):
     from shopify_youtube_etl_spark.plans import llm_text as lt
 
     d = _plant_funnel_corpus(spark, tmp_path, batch1_ids=[300, 315, 320, 340])
-    st = lt._funnel_state(spark, d, "adv-demote-pin")
+    st = StateStore(spark, "funnel", d, "adv-demote-pin")
     lt._build_funnel_state(spark, d, st, 288)
     lab = {r["node"]: r["label"] for r in st["labels"].read().collect()}
     assert lab[60] == 60, "precondition: B is its own rep in history"
@@ -1004,177 +1010,6 @@ def test_funnel_advance_demotion_merges_only_moved_labels(spark, tmp_path):
         assert names <= post, f"{k}: history segments rewritten: {names - post}"
 
 
-# full lane: ~50s torn-state resilience rebuild; the marker protocol's
-# steady state stays default-covered by the funnel equality pins.
-@pytest.mark.full
-def test_funnel_torn_state_rebuilds_behind_the_marker(spark, tmp_path):
-    """The terminal-marker protocol: the nine state tables commit
-    through independent per-table manifests, so the QUERY treats any
-    state without its marker as torn and rebuilds from scratch.
-    Simulate the torn states the old table-existence guard wedged or
-    corrupted on: (a) a build that died mid-way (some tables missing),
-    (b) an advance that died mid-way (marker absent, tables partially
-    advanced) — both must self-heal to the full-recompute answer."""
-    import shutil
-
-    from shopify_youtube_etl_spark.plans import llm_text as lt
-    from shopify_youtube_etl_spark.plans.registry import all_queries
-
-    d = _plant_funnel_corpus(spark, tmp_path, batch1_ids=[300, 315, 320, 340])
-    qs = all_queries()
-    full = sorted(
-        (r["stage"], r["stage_name"], r["n_docs"], r["total_tokens"])
-        for r in qs["curation_funnel_report"].fn(spark, d).collect()
-    )
-
-    # (a) torn BUILD of the single-batch state: wipe two tables but
-    # leave labels (the old guard's probe) — the marker is absent, so
-    # the query must wipe and rebuild instead of wedging on a
-    # FileNotFoundError from the missing tables.
-    one = qs["incremental_curation_funnel"].fn(spark, d).collect()
-    st = lt._funnel_state(spark, d, lt._funnel_split(spark, d))
-    shutil.rmtree(st["postings"].path, ignore_errors=True)
-    shutil.rmtree(st["bench_sh"].path, ignore_errors=True)
-    shutil.rmtree(st["meta"].path + "_built", ignore_errors=True)
-    again = qs["incremental_curation_funnel"].fn(spark, d).collect()
-    assert sorted(map(tuple, one)) == sorted(map(tuple, again))
-
-    # (b) torn ADVANCE of the two-batch state: drop the marker and one
-    # advanced table — retry must rebuild and still equal the full
-    # recompute (the old retry-in-place path silently lost the batch).
-    two = sorted(
-        (r["stage"], r["stage_name"], r["n_docs"], r["total_tokens"])
-        for r in qs["incremental_funnel_two_batch"].fn(spark, d).collect()
-    )
-    assert two == full
-    s2 = lt._funnel_split(spark, d)
-    # Derive the state key the same way the query does, and assert the
-    # torn paths actually exist before tearing them — a drifted key
-    # would otherwise rmtree nothing and pass this test vacuously.
-    mx = (
-        spark.read.parquet(f"{d}/documents.parquet")
-        .agg(F.max("doc_id").alias("m"))
-        .first()["m"]
-    )
-    s1 = int((mx + 1) * 3 // 5)
-    st_b = lt._funnel_state(spark, d, f"adv{s1}-{s2}")
-    import os
-
-    assert os.path.exists(st_b["toks"].path)
-    assert os.path.exists(st_b["meta"].path + "_advanced")
-    shutil.rmtree(st_b["toks"].path, ignore_errors=True)
-    shutil.rmtree(st_b["meta"].path + "_advanced", ignore_errors=True)
-    two_again = sorted(
-        (r["stage"], r["stage_name"], r["n_docs"], r["total_tokens"])
-        for r in qs["incremental_funnel_two_batch"].fn(spark, d).collect()
-    )
-    assert two_again == full
-
-
-# full lane: ~17s wipe-and-rebuild probe of the layout-version bump.
-@pytest.mark.full
-def test_state_layout_version_bump_wipes_and_rebuilds_funnel_state(spark, tmp_path, monkeypatch):
-    """r9 verdict #6: the terminal marker proves a state build COMPLETED,
-    not that it is COMPATIBLE — state persisted by round-N code must not
-    be silently reused by round-N+1 code that changed banding or schema
-    conventions.  The marker row carries common.STATE_LAYOUT_VERSION;
-    bumping it must WIPE the old-layout state (not just append beside
-    it) and rebuild, restamping the marker with the new version."""
-    import os
-
-    from shopify_youtube_etl_spark.operators.upsert import ParquetTable
-    from shopify_youtube_etl_spark.plans import common
-    from shopify_youtube_etl_spark.plans import llm_text as lt
-    from shopify_youtube_etl_spark.plans.registry import all_queries
-
-    d = _plant_funnel_corpus(spark, tmp_path, batch1_ids=[300, 315, 320, 340])
-    qs = all_queries()
-    one = sorted(map(tuple, qs["incremental_curation_funnel"].fn(spark, d).collect()))
-    st = lt._funnel_state(spark, d, lt._funnel_split(spark, d))
-    marker = ParquetTable(spark, st["meta"].path + "_built")
-    assert (
-        marker.read().first()["layout_version"] == common.STATE_LAYOUT_VERSION
-    ), "fresh build must stamp the current layout version"
-
-    # Sentinel inside a state table directory: reuse would leave it, a
-    # true wipe-and-rebuild removes it.
-    sentinel = os.path.join(st["digests"].path, "OLD_LAYOUT_SENTINEL")
-    with open(sentinel, "w") as fh:
-        fh.write("written by the old layout")
-
-    bumped = common.STATE_LAYOUT_VERSION + 1
-    monkeypatch.setattr(common, "STATE_LAYOUT_VERSION", bumped)
-    again = sorted(map(tuple, qs["incremental_curation_funnel"].fn(spark, d).collect()))
-    assert again == one, "rebuilt state must serve the same answer"
-    assert not os.path.exists(sentinel), (
-        "old-layout state directory was reused instead of wiped"
-    )
-    assert marker.read().first()["layout_version"] == bumped
-
-    # A marker WITHOUT the version column (pre-versioning build) is
-    # stale by definition — same wipe-and-rebuild path.
-    marker.overwrite(spark.createDataFrame([(1,)], "split long"))
-    assert not lt._marker_current(marker)
-
-
-def test_state_layout_version_keys_bm25_and_ann_artifacts(spark, monkeypatch):
-    """The BM25 index and ANN artifact tables fold the layout version
-    into their state-directory keys: a bump resolves to a FRESH
-    directory (lazy rebuild on first touch) instead of serving a stale
-    incompatible artifact."""
-    from shopify_youtube_etl_spark.plans import common
-    from shopify_youtube_etl_spark.plans import llm_similarity as ls
-    from shopify_youtube_etl_spark.plans import llm_text as lt
-
-    bm25_before = lt._bm25_index_tables(spark, "/k", 10)["postings"].path
-    ann_before = ls._ann_artifact_table(spark, "/k", "pq").path
-    monkeypatch.setattr(
-        common, "STATE_LAYOUT_VERSION", common.STATE_LAYOUT_VERSION + 1
-    )
-    assert lt._bm25_index_tables(spark, "/k", 10)["postings"].path != bm25_before
-    assert ls._ann_artifact_table(spark, "/k", "pq").path != ann_before
-
-
-def test_funnel_materialize_survives_torn_prelock_marker_read(spark, tmp_path, monkeypatch):
-    """ADVICE r10: the pre-lock fast-path marker probe runs UNLOCKED, so
-    a concurrent rebuilder between its marker rmtree and the re-stamp
-    can tear the parquet read out from under it.  A raising pre-lock
-    probe must be treated as "not current" — fall through to the flock,
-    where the authoritative inside-lock probe sees the completed state
-    and returns WITHOUT wiping or rebuilding."""
-    import os
-
-    from shopify_youtube_etl_spark.plans import llm_text as lt
-    from shopify_youtube_etl_spark.plans.registry import all_queries
-
-    d = _plant_funnel_corpus(spark, tmp_path, batch1_ids=[300, 315])
-    qs = all_queries()
-    qs["incremental_curation_funnel"].fn(spark, d).collect()  # builds state
-    split = lt._funnel_split(spark, d)
-    st = lt._funnel_state(spark, d, split)
-
-    sentinel = os.path.join(st["digests"].path, "REUSE_SENTINEL")
-    with open(sentinel, "w") as fh:
-        fh.write("a rebuild would wipe this")
-
-    real = lt._marker_current
-    calls = {"n": 0}
-
-    def torn_then_real(marker):
-        calls["n"] += 1
-        if calls["n"] == 1:
-            raise OSError("simulated torn read under a concurrent rebuild")
-        return real(marker)
-
-    monkeypatch.setattr(lt, "_marker_current", torn_then_real)
-    lt._ensure_funnel_state(spark, d, st, split)  # must not raise
-    assert calls["n"] >= 2, "must fall through to the inside-lock probe"
-    assert os.path.exists(sentinel), (
-        "a torn PRE-lock read must not trigger a wipe-and-rebuild when "
-        "the inside-lock probe finds the state current"
-    )
-
-
 # full lane: ~30s crash-retry convergence probe; commit-order reasoning
 # is documented at _advance_funnel_state and the advance's steady state
 # stays default-covered by the advance-survival and equality pins.
@@ -1190,11 +1025,11 @@ def test_funnel_advance_crash_before_meta_commit_retries_cleanly(spark, tmp_path
     from shopify_youtube_etl_spark.plans import llm_text as lt
 
     d = _plant_funnel_corpus(spark, tmp_path, batch1_ids=[300, 315, 320, 340])
-    ref = lt._funnel_state(spark, d, "adv-crash-ref")
+    ref = StateStore(spark, "funnel", d, "adv-crash-ref")
     lt._build_funnel_state(spark, d, ref, 288)
     lt._advance_funnel_state(ref, lt._funnel_batch(spark, d, ref, 288, 384))
 
-    st = lt._funnel_state(spark, d, "adv-crash-pin")
+    st = StateStore(spark, "funnel", d, "adv-crash-pin")
     lt._build_funnel_state(spark, d, st, 288)
 
     def boom(*a, **k):
@@ -1209,7 +1044,7 @@ def test_funnel_advance_crash_before_meta_commit_retries_cleanly(spark, tmp_path
     assert {r["node"]: r["label"] for r in st["labels"].read().collect()}[60] == 10
     # Retry converges to the clean advance, table by table.
     lt._advance_funnel_state(st, lt._funnel_batch(spark, d, st, 288, 384))
-    for k in st:
+    for k in lt._FUNNEL_TABLES:
         got = sorted(map(tuple, st[k].read().collect()))
         want = sorted(map(tuple, ref[k].read().collect()))
         assert got == want, f"{k} diverged after crash-retry"
@@ -1277,7 +1112,7 @@ def test_incremental_funnel_demotes_bridged_representative(spark, tmp_path):
     # decontam: H3 (id 30) flipped by the NEW bench doc -> 3.
     assert by["decontam"][0] == 3
     # And the demotion/flip shaped the SURVIVOR SET, not just counts:
-    st = lt._funnel_state(spark, str(d), lt._funnel_split(spark, str(d)))
+    st = StateStore(spark, "funnel", str(d), lt._funnel_split(spark, str(d)))
     hist_reps = {r["node"] for r in st["labels"].read().collect()
                  if r["node"] == r["label"]}
     assert 60 in hist_reps, "precondition: B was its own rep in history"
@@ -1330,7 +1165,7 @@ def test_ivf_incremental_assign_no_silent_retrain_and_recall(spark, sf_dir):
     # Poison: shift every centroid far away; the report must reflect the
     # poisoned quantizer (drift explodes) and the artifact must survive
     # the query unchanged (no silent retrain).
-    tbl = sim._ann_artifact_table(spark, sf_dir, f"ivfbase{split}")
+    tbl = _ann_model(spark, sf_dir, f"ivfbase{split}")
     poisoned = tbl.read().select(
         "cell",
         F2.transform("centroid_vec", lambda x: x + F2.lit(1000.0)).alias(
@@ -1412,7 +1247,7 @@ def test_ivf_hot_cell_split_locality_and_recall(spark, sf_dir):
     assert sorted(map(tuple, rep)) == sorted(map(tuple, rep2))
 
     # Artifact holds exactly the split cells' children.
-    art = sim._ann_artifact_table(spark, sf_dir, f"ivfsplit{split}").read().collect()
+    art = _ann_model(spark, sf_dir, f"ivfsplit{split}").read().collect()
     assert {r["cell"] for r in art} == split_cells
     assert len(art) == len(rep)
 
@@ -1456,14 +1291,14 @@ def test_ivfpq_code_refresh_residuals_and_conservation(spark, sf_dir):
     split = sim._ivf_append_split(spark, sf_dir)
     stage2 = {
         (r["cell"], r["child"]): r["n_members"]
-        for r in sim._ann_artifact_table(spark, sf_dir, f"ivfsplit{split}")
+        for r in _ann_model(spark, sf_dir, f"ivfsplit{split}")
         .read()
         .collect()
     }
     assert {(r["cell"], r["child"]): r["n_vectors"] for r in rep} == stage2
 
     codes = (
-        sim._ann_artifact_table(spark, sf_dir, f"ivfsplitcodes{split}")
+        _ann_model(spark, sf_dir, f"ivfsplitcodes{split}")
         .read()
         .collect()
     )
@@ -1477,7 +1312,7 @@ def test_ivfpq_code_refresh_residuals_and_conservation(spark, sf_dir):
     assert sorted(map(tuple, rep)) == sorted(map(tuple, rep2))
 
     # The maintenance chain must not clobber the full-corpus artifact.
-    base_cb = sim._ann_artifact_table(spark, sf_dir, f"ivfpqbase{split}")
+    base_cb = _ann_model(spark, sf_dir, f"ivfpqbase{split}")
     assert base_cb.exists()
     rows = base_cb.read().limit(1).collect()
     assert rows and rows[0]["centers_fp"] == sim._centers_fingerprint(
@@ -1511,7 +1346,7 @@ def test_bm25_incremental_index_equals_from_scratch(spark, sf_dir):
     from shopify_youtube_etl_spark.plans import llm_text as lt
 
     split = lt._funnel_split(spark, sf_dir)
-    idx = lt._bm25_index_tables(spark, sf_dir, split)
+    idx = StateStore(spark, "bm25idx", sf_dir, split)
 
     def base_segments(tbl):
         return {
@@ -1535,11 +1370,14 @@ def test_bm25_incremental_index_equals_from_scratch(spark, sf_dir):
 
     # Torn base build self-heals: the two base overwrites commit through
     # independent manifests, so a build dying between them leaves
-    # postings committed and doclen missing — the both-manifests guard
-    # must rebuild instead of wedging every retry on doclen.read().
+    # postings committed, doclen missing and no _BUILT marker — the
+    # next call must wipe and rebuild instead of wedging every retry on
+    # doclen.read().
+    import os
     import shutil
 
     shutil.rmtree(idx["doclen"].path, ignore_errors=True)
+    os.remove(os.path.join(idx.path, "_BUILT"))
     healed = [
         tuple(r)
         for r in specs["bm25_incremental_index"].fn(spark, sf_dir).collect()
@@ -1601,13 +1439,13 @@ def test_ann_erasure_prunes_segments_and_erases_tombstones(spark, sf_dir):
 
     split = sim._ivf_append_split(spark, sf_dir)
     codes = (
-        sim._ann_artifact_table(spark, sf_dir, f"ivfsplitcodes{split}")
+        _ann_model(spark, sf_dir, f"ivfsplitcodes{split}")
         .read()
         .select("vec_id", "cell", "child")
     )
     lo, hi = codes.agg(F2.min("vec_id"), F2.max("vec_id")).first()
     mid = (lo + hi) // 2 + 1
-    demo = sim._ann_artifact_table(spark, sf_dir, f"ivferasure{split}")
+    demo = _ann_model(spark, sf_dir, f"ivferasure{split}")
 
     # Low-range segment name captured BEFORE a re-run... the demo state
     # is rebuilt per run, so instead re-run and watch the commit: grab

@@ -322,13 +322,14 @@ def test_incremental_hll_maintenance_equals_full_and_reads_state(spark, sf_dir):
     import shutil
 
     from shopify_youtube_etl_spark.plans import scale_ops as so
-    from shopify_youtube_etl_spark.plans.common import day_str
+    from shopify_youtube_etl_spark.plans.common import StateStore, day_str
     from shopify_youtube_etl_spark.plans.registry import all_queries
 
     specs = all_queries()
     split = so._hll_split(spark, sf_dir)
-    st = so._hll_state_table(spark, sf_dir, split)
-    shutil.rmtree(st.path, ignore_errors=True)  # fresh state for this test
+    store = StateStore(spark, "hllstate", sf_dir, split)
+    st = store["sketches"]
+    shutil.rmtree(store.path, ignore_errors=True)  # fresh state for this test
     try:
         got = sorted(
             map(
@@ -407,7 +408,7 @@ def test_incremental_hll_maintenance_equals_full_and_reads_state(spark, sf_dir):
         unpoisoned = {d: e for d, e in got if d != first_day}
         assert got2 == unpoisoned
     finally:
-        shutil.rmtree(st.path, ignore_errors=True)
+        shutil.rmtree(store.path, ignore_errors=True)
 
 
 def test_incremental_kll_maintenance_band_poison_and_write_shape(spark, sf_dir):
@@ -424,13 +425,14 @@ def test_incremental_kll_maintenance_band_poison_and_write_shape(spark, sf_dir):
     import shutil
 
     from shopify_youtube_etl_spark.plans import scale_ops as so
-    from shopify_youtube_etl_spark.plans.common import day_str
+    from shopify_youtube_etl_spark.plans.common import StateStore, day_str
     from shopify_youtube_etl_spark.plans.registry import all_queries
 
     specs = all_queries()
     split = so._hll_split(spark, sf_dir)
-    st = so._kll_state_table(spark, sf_dir, split)
-    shutil.rmtree(st.path, ignore_errors=True)
+    store = StateStore(spark, "kllstate", sf_dir, split)
+    st = store["partials"]
+    shutil.rmtree(store.path, ignore_errors=True)
     try:
         got = {
             r["day"]: r
@@ -512,4 +514,4 @@ def test_incremental_kll_maintenance_band_poison_and_write_shape(spark, sf_dir):
         else:
             assert got[first_day]["n_events"] == hist_n
     finally:
-        shutil.rmtree(st.path, ignore_errors=True)
+        shutil.rmtree(store.path, ignore_errors=True)
