@@ -18,14 +18,20 @@ from shopify_youtube_etl_spark.functions.text import (
     normalize_text,
     predicted_lang,
     quality_score,
+    shingles_from_words as _shingles,
     token_count_bpe_estimate,
     token_count_whitespace,
     words,
 )
 from shopify_youtube_etl_spark.functions.similarity import (
     double_literal as _double_literal,
+    jaccard as _jaccard,
+    lsh_bands as _lsh_bands,
+    lsh_candidate_pairs as _lsh_pairs,
+    minhash_signature as _minhash,
 )
-from shopify_youtube_etl_spark.plans.common import StateStore, spread, t
+from shopify_youtube_etl_spark.operators.components import connected_components
+from shopify_youtube_etl_spark.plans.common import StateStore, spread, t, table_col_max
 from shopify_youtube_etl_spark.plans.registry import query
 
 # DuckDB fragments mirroring functions/text.py helpers.
@@ -2010,56 +2016,217 @@ def curation_funnel_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     digest shuffle, label propagation O(log diameter); the funnel adds
     only per-stage counts (tiny aggs).  Counts are monotonically
     non-increasing by construction."""
-    from shopify_youtube_etl_spark.functions.similarity import (
-        jaccard as _jaccard,
-        lsh_bands as _lsh_bands,
-        lsh_candidate_pairs as _lsh_pairs,
-        minhash_signature as _minhash,
+    fr = _funnel_cold(spark, sf_dir, None)
+    exact = fr["exact"]
+    # Survivor decisions ride id-only frames (decide with small rows);
+    # token counts attach from the exact metadata at the final stage
+    # aggregates.
+    neardup_ids = fr["labels"].where(F.col("node") == F.col("label")).select(
+        F.col("node").alias("doc_id")
     )
-    from shopify_youtube_etl_spark.functions.text import (
-        shingles_from_words as _shingles,
+    # Decontam reads the shingle store (no re-tokenize of survivors).
+    doc_sh = fr["shingled"].join(neardup_ids, "doc_id").select(
+        "doc_id", F.explode("sh").alias("sh")
     )
-    from shopify_youtube_etl_spark.operators.components import connected_components
+    contaminated = (
+        doc_sh.join(
+            F.broadcast(fr["bench_sh"].withColumn("hit", F.lit(1))), "sh", "left"
+        )
+        .groupBy("doc_id")
+        .agg((F.sum(F.coalesce("hit", F.lit(0))) / F.count("*")).alias("cont"))
+        .where(F.col("cont") >= 0.2)
+        .select("doc_id")
+    )
+    decontam_ids = neardup_ids.join(contaminated, "doc_id", "left_anti")
+    return (
+        fr["stage12"]
+        .unionByName(_survivor_stage(3, "exact_dedup", exact, None))
+        .unionByName(_survivor_stage(4, "neardup", exact, neardup_ids))
+        .unionByName(_survivor_stage(5, "decontam", exact, decontam_ids))
+    )
 
-    # spread(): the funnel tokenizes/shingles every document several
-    # times over (census, dedup, minhash, decontam) — on a small
-    # single-file scan all of that ran in ONE task (guide §2.5 input
-    # skew: repartition immediately after the read); at real scale the
-    # scan is already split past core count and spread() is a no-op.
-    docs = (
-        spread(spark, sf_dir, "documents")
-        .where(F.col("doc_id").isNotNull() & F.col("text").isNotNull())
-        .select("doc_id", "text")
-    )
-    bench = docs.where(F.col("doc_id") % 50 == 7)
-    corpus = docs.where(F.col("doc_id") % 50 != 7)
 
+# ---------------------------------------------------------------------------
+# Funnel stages shared by the two pipelines: the cold one (the report and
+# the history-state build, both through ``_funnel_cold``) and the batch
+# one (``_funnel_batch``, curating a slice against persisted state).
+# ---------------------------------------------------------------------------
+
+def _funnel_docs(
+    spark: SparkSession, sf_dir: str, lo: int | None = None, hi: int | None = None
+) -> tuple[DataFrame, DataFrame]:
+    """(bench, corpus) over lo ≤ doc_id < hi (either bound optional):
+    the held-out slice doc_id % 50 == 7 plays the external benchmark.
+
+    spread(): the funnel tokenizes and shingles every scanned document;
+    on a small single-file scan all of that would run in ONE task (input
+    skew: repartition immediately after the read).  At real scale
+    the scan is already split past core count and spread() is a no-op;
+    partitioning changes no result (min-per-digest dedup, map-side
+    signatures, aggregates)."""
+    docs = spread(spark, sf_dir, "documents").where(
+        F.col("doc_id").isNotNull() & F.col("text").isNotNull()
+    )
+    if lo is not None:
+        docs = docs.where(F.col("doc_id") >= lo)
+    if hi is not None:
+        docs = docs.where(F.col("doc_id") < hi)
+    docs = docs.select("doc_id", "text")
+    return docs.where(F.col("doc_id") % 50 == 7), docs.where(F.col("doc_id") % 50 != 7)
+
+
+def _funnel_meta(corpus: DataFrame, eager: bool) -> DataFrame:
+    """The ONE tokenizing pass over a corpus slice (the funnel's
+    expensive scan is tokenization): (doc_id, nt, q, digest) — token
+    count, the quality flag (20 ≤ tokens and mean token length ≤ 12)
+    and md5(text), checkpointed.  METADATA ONLY: a text-carrying
+    checkpoint is a full-corpus copy to executor-local storage at the
+    100 TB design point.  The stage-1/2 census, the
+    exact-dedup winners and the survivor token sums all read these
+    stored columns; survivor TEXT flows from the scan exactly once."""
     ws = words(F.col("text"))
-
-    # ONE tokenizing pass over the corpus (guide §1.2: the funnel's
-    # expensive scan is tokenization): the checkpointed base frame
-    # carries token count, the quality flag, and the digest — METADATA
-    # ONLY (ADVICE r12: the r12 form also checkpointed ``text``, a
-    # full-corpus copy to executor-local storage at the 100 TB design
-    # point).  The census becomes a conditional aggregate over stored
-    # columns, exact-dedup decides winners on (digest, doc_id), and
-    # survivor TEXT flows from the scan exactly once (the exact_text
-    # join below).  Values are identical by construction — same
-    # expressions, same rows.
-    nt_expr = F.size(ws).cast("long")
-    base = corpus.select(
+    quality = (F.size(ws) >= 20) & (
+        (F.length(F.regexp_replace("text", r"\s+", "")) / F.size(ws)) <= 12
+    )
+    return corpus.select(
         "doc_id",
-        nt_expr.alias("nt"),
-        _funnel_quality_pred().alias("q"),
+        F.size(ws).cast("long").alias("nt"),
+        quality.alias("q"),
         F.md5("text").alias("digest"),
-    ).localCheckpoint(eager=False)
+    ).localCheckpoint(eager=eager)
+
+
+def _funnel_census(meta: DataFrame) -> DataFrame:
+    """Stages 1+2 as one conditional aggregate over ``_funnel_meta``
+    columns: (n1, t1) ingest docs/tokens, (n2, t2) quality survivors."""
+    return meta.select("nt", "q").agg(
+        F.count("*").alias("n1"),
+        F.coalesce(F.sum("nt"), F.lit(0)).cast("long").alias("t1"),
+        F.count(F.when(F.col("q"), 1)).alias("n2"),
+        F.coalesce(F.sum(F.when(F.col("q"), F.col("nt"))), F.lit(0))
+        .cast("long")
+        .alias("t2"),
+    )
+
+
+def _funnel_shingled(text: DataFrame) -> DataFrame:
+    """(doc_id, sh): 3-word shingle arrays of the docs in (doc_id,
+    text) that have at least 3 words."""
+    return (
+        text.select("doc_id", words(F.col("text")).alias("ws"))
+        .where(F.size("ws") >= 3)
+        .select("doc_id", _shingles("ws", 3).alias("sh"))
+    )
+
+
+def _bench_shingles(bench: DataFrame) -> DataFrame:
+    """(sh): the distinct 3-word shingles of the benchmark docs."""
+    return (
+        bench.select("doc_id", words(F.col("text")).alias("bw"))
+        .where(F.size("bw") >= 3)
+        .select(F.explode(_shingles("bw", 3)).alias("sh"))
+        .distinct()
+    )
+
+
+def _sh_hashes(shingles: DataFrame) -> DataFrame:
+    """(sh_hash): the distinct xxhash64 values of a (sh) shingle set,
+    the key of the persisted benchmark set."""
+    return shingles.select(F.xxhash64("sh").alias("sh_hash")).distinct()
+
+
+def _funnel_bands(shingled: DataFrame) -> DataFrame:
+    """(doc_id, band_id, band_hash): MinHash 32 × LSH 8 bands."""
+    return _lsh_bands(
+        _minhash(shingled, "doc_id", "sh", num_hashes=32), "doc_id",
+        num_hashes=32, bands=8,
+    )
+
+
+def _jaccard_verified(pairs: DataFrame, side) -> DataFrame:
+    """Candidate (id_a, id_b) pairs whose exact shingle Jaccard is
+    ≥ 0.5, as (src, dst) edges; ``side(id_col, sh_col)`` returns one
+    side's (id_col, sh_col) shingle frame.
+
+    Both sides SHUFFLE_HASH-pinned: the shingle arrays are ~3x the row
+    size the planner estimates from the id column, so the optimizer can
+    mis-choose a side as a broadcast build; shuffled-hash keeps the
+    build per-partition."""
+    return (
+        pairs.join(side("id_a", "sa").hint("shuffle_hash"), "id_a")
+        .join(side("id_b", "sb").hint("shuffle_hash"), "id_b")
+        .where(_jaccard(F.col("sa"), F.col("sb")) >= 0.5)
+        .select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
+    )
+
+
+def _survivor_stage(
+    n: int, name: str, toks: DataFrame, ids: DataFrame | None
+) -> DataFrame:
+    """One survivor-stage row: doc count and token sum over ``toks``
+    (doc_id, n_tokens), restricted to ``ids`` unless it is None."""
+    src = toks if ids is None else ids.join(toks, "doc_id")
+    return src.agg(
+        F.lit(n).alias("stage"),
+        F.lit(name).alias("stage_name"),
+        F.count("*").alias("n_docs"),
+        F.coalesce(F.sum("n_tokens"), F.lit(0)).cast("long").alias("total_tokens"),
+    )
+
+
+def _postings(shingled: DataFrame) -> DataFrame:
+    """(doc_id, sh_hash, k): the inverted index of survivor shingles."""
+    return (
+        shingled.select("doc_id", F.explode("sh").alias("s"))
+        .groupBy("doc_id", F.xxhash64("s").alias("sh_hash"))
+        .agg(F.count("*").alias("k"))
+    )
+
+
+def _cstat(postings: DataFrame, bench_hashes: DataFrame) -> DataFrame:
+    """(doc_id, n_sh, hits): each doc's shingle count and how many of
+    those shingles are in the (sh_hash) benchmark set."""
+    return (
+        postings.join(
+            F.broadcast(bench_hashes.withColumn("hit", F.lit(1))), "sh_hash", "left"
+        )
+        .groupBy("doc_id")
+        .agg(
+            F.sum("k").cast("long").alias("n_sh"),
+            F.sum(F.when(F.col("hit").isNotNull(), F.col("k")).otherwise(0))
+            .cast("long")
+            .alias("hits"),
+        )
+    )
+
+
+def _funnel_cold(spark: SparkSession, sf_dir: str, hi: int | None) -> dict:
+    """The cold funnel over doc_id < hi (every document when hi is
+    None), from the docs scan up to decontam.  ``curation_funnel_report``
+    finishes it with decontam and the survivor-stage rows;
+    ``_build_funnel_state`` persists these same frames as the history
+    state.  Returns:
+
+      base      (doc_id, nt, q, digest) corpus metadata
+      exact     (doc_id, n_tokens) exact-dedup survivors
+      shingled  (doc_id, sh) survivor shingle store
+      bands     (doc_id, band_id, band_hash) survivor LSH bands
+      verified  (src, dst) verified near-dup edges
+      labels    (node, label) component labels of the exact survivors
+      bench_sh  (sh) distinct benchmark shingles
+      stage12   the ingest and quality stage rows
+
+    Checkpoints are lazy: each materializes in its first consumer's job
+    — one fewer barrier (A/B at sf0.1: lazy 6.4-6.8s vs eager 7.7-8.3s
+    warm).  That is safe for the history build too: this lineage reads
+    only the corpus, never a state table."""
+    bench, corpus = _funnel_docs(spark, sf_dir, hi=hi)
+    base = _funnel_meta(corpus, eager=False)
     quality = base.where(F.col("q"))
 
-    # Exact-dedup survivors as METADATA (doc_id, n_tokens) — the three
-    # survivor-stage counts sum a stored long; tiny on disk.
-    # (Lazy checkpoints: materialize in the first consumer's job — one
-    # fewer barrier; this query writes no state, so laziness is safe.
-    # A/B at sf0.1: lazy 6.4-6.8s vs eager 7.7-8.3s warm.)
+    # Exact-dedup survivors as METADATA (doc_id, n_tokens): winners
+    # decided on (digest, doc_id); the survivor-stage counts sum a
+    # stored long.
     exact = (
         quality.groupBy("digest")
         .agg(F.min("doc_id").alias("doc_id"))
@@ -2069,118 +2236,52 @@ def curation_funnel_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # ONE tokenize+shingle pass over survivor text, checkpointed and
-    # shared by FOUR consumers (minhash signatures, both candidate
-    # verify sides, the decontam shingle explode) — the r12 form
-    # re-tokenized for each (guide §1.2; profiled: three concurrent
-    # ~1.3-1.7s 32-task tokenize jobs per rep at sf0.1 doing work this
-    # store now holds).  Storage trade, stated: the shingle arrays are
-    # ~3x the text bytes on executor-local disk for the report's
+    # shared by every consumer (minhash signatures, both verify sides,
+    # decontam, the history postings) so none re-tokenizes (profiled:
+    # ~1.3-1.7s of 32-task tokenize work per consumer per rep at
+    # sf0.1).  Storage trade, stated: the shingle arrays are
+    # ~3x the text bytes on executor-local disk for the funnel's
     # lifetime; the alternative at 100 TB is three extra full-corpus
-    # tokenize passes in this cold full-corpus build (the incremental
-    # funnel stays candidate-bounded and does NOT materialize this).
-    exact_text = corpus.join(exact.select("doc_id"), "doc_id")
-    shingled = (
-        exact_text.select("doc_id", ws.alias("ws"))
-        .where(F.size("ws") >= 3)
-        .select("doc_id", _shingles("ws", 3).alias("sh"))
-        .localCheckpoint(eager=False)
-    )
-    sigs = _minhash(shingled, "doc_id", "sh", num_hashes=32)
-    pairs = _lsh_pairs(
-        _lsh_bands(sigs, "doc_id", num_hashes=32, bands=8), "doc_id"
+    # tokenize passes (the batch path stays candidate-bounded and does
+    # NOT materialize this).
+    shingled = _funnel_shingled(
+        corpus.join(exact.select("doc_id"), "doc_id")
     ).localCheckpoint(eager=False)
+    bands = _funnel_bands(shingled)
+    pairs = _lsh_pairs(bands, "doc_id").localCheckpoint(eager=False)
 
-    def cand_sh(id_col: str, out_id: str, out_sh: str):
+    def cand_sh(id_col: str, out_sh: str) -> DataFrame:
         ids = pairs.select(F.col(id_col).alias("doc_id")).distinct()
-        return (
-            shingled.join(F.broadcast(ids), "doc_id")
-            .select(F.col("doc_id").alias(out_id), F.col("sh").alias(out_sh))
+        return shingled.join(F.broadcast(ids), "doc_id").select(
+            F.col("doc_id").alias(id_col), F.col("sh").alias(out_sh)
         )
 
-    # cand_sh sides SHUFFLE_HASH-pinned (the minhash r10 hazard class):
-    # the stored shingle arrays are ~3x the row-size the planner
-    # estimates from the id column, so the optimizer can mis-choose
-    # this side as a broadcast build; shuffled-hash keeps the build
-    # per-partition.
-    verified = (
-        pairs.join(cand_sh("id_a", "id_a", "sa").hint("shuffle_hash"), "id_a")
-        .join(cand_sh("id_b", "id_b", "sb").hint("shuffle_hash"), "id_b")
-        .where(_jaccard(F.col("sa"), F.col("sb")) >= 0.5)
-        .select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-    )
+    verified = _jaccard_verified(pairs, cand_sh)
     labels = connected_components(verified, exact.select("doc_id"))
-    # Survivor decisions ride id-only frames (guide §8: decide with
-    # small rows); token counts attach from the exact metadata at the
-    # final stage aggregates.
-    neardup_ids = labels.where(F.col("node") == F.col("label")).select(
-        F.col("node").alias("doc_id")
-    )
 
-    bench_sh = (
-        bench.select("doc_id", ws.alias("bw"))
-        .where(F.size("bw") >= 3)
-        .select(F.explode(_shingles("bw", 3)).alias("sh"))
-        .distinct()
-    )
-    # Decontam reads the shingle store (no re-tokenize of survivors).
-    doc_sh = shingled.join(neardup_ids, "doc_id").select(
-        "doc_id", F.explode("sh").alias("sh")
-    )
-    contaminated = (
-        doc_sh.join(F.broadcast(bench_sh.withColumn("hit", F.lit(1))), "sh", "left")
-        .groupBy("doc_id")
-        .agg((F.sum(F.coalesce("hit", F.lit(0))) / F.count("*")).alias("cont"))
-        .where(F.col("cont") >= 0.2)
-        .select("doc_id")
-    )
-    decontam_ids = neardup_ids.join(contaminated, "doc_id", "left_anti")
-
-    # Stages 1+2 from the checkpointed base frame (token count and the
-    # quality flag were computed in ITS single tokenizing pass); stages
-    # 3-5 sum the n_tokens stored in the exact checkpoint — five stage
-    # rows, one tokenization per document for the whole funnel.
-    census = base.select("nt", "q").agg(
-        F.count("*").alias("n1"),
-        F.coalesce(F.sum("nt"), F.lit(0)).cast("long").alias("t1"),
-        F.count(F.when(F.col("q"), 1)).alias("n2"),
-        F.coalesce(F.sum(F.when(F.col("q"), F.col("nt"))), F.lit(0))
-        .cast("long")
-        .alias("t2"),
-    )
-    stage12 = census.select(
+    stage12 = _funnel_census(base).select(
         F.explode(
-            F.array(
+            F.array(*[
                 F.struct(
-                    F.lit(1).alias("stage"),
-                    F.lit("ingest").alias("stage_name"),
-                    F.col("n1").alias("n_docs"),
-                    F.col("t1").alias("total_tokens"),
-                ),
-                F.struct(
-                    F.lit(2).alias("stage"),
-                    F.lit("quality").alias("stage_name"),
-                    F.col("n2").alias("n_docs"),
-                    F.col("t2").alias("total_tokens"),
-                ),
-            )
+                    F.lit(n).alias("stage"),
+                    F.lit(name).alias("stage_name"),
+                    F.col(f"n{n}").alias("n_docs"),
+                    F.col(f"t{n}").alias("total_tokens"),
+                )
+                for n, name in ((1, "ingest"), (2, "quality"))
+            ])
         ).alias("s")
     ).select("s.*")
-
-    def stage(n: int, name: str, ids: DataFrame | None) -> DataFrame:
-        src = exact if ids is None else ids.join(exact, "doc_id")
-        return src.agg(
-            F.lit(n).alias("stage"),
-            F.lit(name).alias("stage_name"),
-            F.count("*").alias("n_docs"),
-            F.coalesce(F.sum("n_tokens"), F.lit(0)).cast("long").alias("total_tokens"),
-        )
-
-    return (
-        stage12
-        .unionByName(stage(3, "exact_dedup", None))
-        .unionByName(stage(4, "neardup", neardup_ids))
-        .unionByName(stage(5, "decontam", decontam_ids))
-    )
+    return {
+        "base": base,
+        "exact": exact,
+        "shingled": shingled,
+        "bands": bands,
+        "verified": verified,
+        "labels": labels,
+        "bench_sh": _bench_shingles(bench),
+        "stage12": stage12,
+    }
 
 
 # ---------------------------------------------------------------------------
@@ -2203,8 +2304,6 @@ def _funnel_split(spark: SparkSession, sf_dir: str) -> int:
     data (exact footer max — equals the former max() agg without the
     full id-column pass); at the 500-doc test SFs this lands on the
     historical 400."""
-    from shopify_youtube_etl_spark.plans.common import table_col_max
-
     mx = table_col_max(spark, sf_dir, "documents", "doc_id")
     return int((mx + 1) * 4 // 5) if mx is not None else 0
 
@@ -2226,151 +2325,26 @@ _FUNNEL_TABLES = (
 )
 
 
-def _funnel_quality_pred():
-    """The funnel's quality predicate as a Column, so the filter form
-    (``_funnel_quality``) and the conditional-aggregate form
-    (``_funnel_stage_rows``' single-pass stage-1/2 census) are the
-    same expression by construction."""
-    ws = words(F.col("text"))
-    return (F.size(ws) >= 20) & (
-        (F.length(F.regexp_replace("text", r"\s+", "")) / F.size(ws)) <= 12
-    )
-
-
-def _funnel_quality(corpus: DataFrame) -> DataFrame:
-    return corpus.where(_funnel_quality_pred())
-
-
-def _funnel_stage_row(n: int, name: str, df: DataFrame) -> DataFrame:
-    return df.agg(
-        F.lit(n).alias("stage"),
-        F.lit(name).alias("stage_name"),
-        F.count("*").alias("n_docs"),
-        F.coalesce(F.sum(F.size(words(F.col("text")))), F.lit(0))
-        .cast("long")
-        .alias("total_tokens"),
-    )
-
-
 def _build_funnel_state(spark: SparkSession, sf_dir: str, st: StateStore, split: int) -> None:
-    """One-time history curation: runs the funnel's quality → exact →
-    LSH → components → decontam stages over the history slice and
-    persists every reusable structure.  Deliberately the same
-    primitives as ``curation_funnel_report`` so batch-time equality is
-    a property of the STATE design, not of duplicated constants."""
-    from shopify_youtube_etl_spark.functions.similarity import (
-        jaccard as _jaccard,
-        lsh_bands as _lsh_bands,
-        lsh_candidate_pairs as _lsh_pairs,
-        minhash_signature as _minhash,
-    )
-    from shopify_youtube_etl_spark.functions.text import (
-        shingles_from_words as _shingles,
-    )
-    from shopify_youtube_etl_spark.operators.components import connected_components
-
-    # spread(): same single-task-tokenization fix as the full funnel —
-    # the history build shingles every history doc; a no-op once the
-    # scan is already split past core count.
-    docs = (
-        spread(spark, sf_dir, "documents")
-        .where(F.col("doc_id").isNotNull() & F.col("text").isNotNull())
-        .where(F.col("doc_id") < split)
-        .select("doc_id", "text")
-    )
-    bench = docs.where(F.col("doc_id") % 50 == 7)
-    corpus = docs.where(F.col("doc_id") % 50 != 7)
-    quality = _funnel_quality(corpus)
-    ws = words(F.col("text"))
-
-    exact = (
-        quality.groupBy(F.md5("text").alias("digest"))
-        .agg(F.min("doc_id").alias("doc_id"))
-        .join(quality, "doc_id")
-        .select("doc_id", "text")
-        .localCheckpoint(eager=True)
-    )
-
-    st["meta"].overwrite(
-        _funnel_stage_row(1, "ingest", corpus).unionByName(
-            _funnel_stage_row(2, "quality", quality)
-        )
-    )
+    """One-time history curation: the cold funnel's own frames over
+    doc_id < split (``_funnel_cold``), persisted as the history state.
+    The build and ``curation_funnel_report`` share one lineage, so
+    batch-time equality with the full recompute is a property of the
+    STATE design, not of two copies of the stages agreeing."""
+    fr = _funnel_cold(spark, sf_dir, split)
+    st["meta"].overwrite(fr["stage12"])
     st["digests"].overwrite(
-        quality.select(F.md5("text").alias("digest")).distinct(),
+        fr["base"].where(F.col("q")).select("digest").distinct(),
         stats_cols=["digest"],
     )
-    st["toks"].overwrite(
-        exact.select("doc_id", F.size(ws).cast("long").alias("n_tokens")),
-        stats_cols=["doc_id"],
-    )
-
-    shingled = (
-        exact.select("doc_id", ws.alias("wa"))
-        .where(F.size("wa") >= 3)
-        .select("doc_id", _shingles("wa", 3).alias("sh"))
-    )
-    bands = _lsh_bands(
-        _minhash(shingled, "doc_id", "sh", num_hashes=32), "doc_id",
-        num_hashes=32, bands=8,
-    )
-    st["bands"].overwrite(bands, stats_cols=["doc_id"])
-    pairs = _lsh_pairs(st["bands"].read(), "doc_id").localCheckpoint(eager=True)
-
-    def cand_sh(id_col: str, out_id: str, out_sh: str):
-        ids = pairs.select(F.col(id_col).alias("doc_id")).distinct()
-        return (
-            exact.join(F.broadcast(ids), "doc_id")
-            .select("doc_id", ws.alias("w2"))
-            .select(F.col("doc_id").alias(out_id), _shingles("w2", 3).alias(out_sh))
-        )
-
-    # cand_sh sides SHUFFLE_HASH-pinned — same rationale as the
-    # full-funnel verify join above (r10 hazard class).
-    verified = (
-        pairs.join(cand_sh("id_a", "id_a", "sa").hint("shuffle_hash"), "id_a")
-        .join(cand_sh("id_b", "id_b", "sb").hint("shuffle_hash"), "id_b")
-        .where(_jaccard(F.col("sa"), F.col("sb")) >= 0.5)
-        .select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-    )
-    st["edges"].overwrite(verified, stats_cols=["src"])
-    st["labels"].overwrite(
-        connected_components(st["edges"].read(), exact.select("doc_id")),
-        stats_cols=["node"],
-    )
-
-    bench_sh = (
-        bench.select(ws.alias("bw"))
-        .where(F.size("bw") >= 3)
-        .select(F.explode(_shingles("bw", 3)).alias("s"))
-        .select(F.xxhash64("s").alias("sh_hash"))
-        .distinct()
-    )
-    st["bench_sh"].overwrite(bench_sh, stats_cols=["sh_hash"])
-    postings = (
-        exact.select("doc_id", ws.alias("dw"))
-        .where(F.size("dw") >= 3)
-        .select("doc_id", F.explode(_shingles("dw", 3)).alias("s"))
-        .groupBy("doc_id", F.xxhash64("s").alias("sh_hash"))
-        .agg(F.count("*").alias("k"))
-    )
-    st["postings"].overwrite(postings, stats_cols=["doc_id"])
+    st["toks"].overwrite(fr["exact"], stats_cols=["doc_id"])
+    st["bands"].overwrite(fr["bands"], stats_cols=["doc_id"])
+    st["edges"].overwrite(fr["verified"], stats_cols=["src"])
+    st["labels"].overwrite(fr["labels"], stats_cols=["node"])
+    st["bench_sh"].overwrite(_sh_hashes(fr["bench_sh"]), stats_cols=["sh_hash"])
+    st["postings"].overwrite(_postings(fr["shingled"]), stats_cols=["doc_id"])
     st["cstat"].overwrite(
-        st["postings"]
-        .read()
-        .join(
-            F.broadcast(st["bench_sh"].read().withColumn("hit", F.lit(1))),
-            "sh_hash",
-            "left",
-        )
-        .groupBy("doc_id")
-        .agg(
-            F.sum("k").cast("long").alias("n_sh"),
-            F.sum(F.when(F.col("hit").isNotNull(), F.col("k")).otherwise(0))
-            .cast("long")
-            .alias("hits"),
-        ),
-        stats_cols=["doc_id"],
+        _cstat(st["postings"].read(), st["bench_sh"].read()), stats_cols=["doc_id"]
     )
 
 
@@ -2430,48 +2404,11 @@ def _funnel_batch(
     persisted state ``st`` — the computation shared by the
     single-batch report, the two-batch chain, and the state advance.
     Returns every maintained frame; nothing is written here."""
-    from shopify_youtube_etl_spark.functions.similarity import (
-        jaccard as _jaccard,
-        lsh_bands as _lsh_bands,
-        lsh_candidate_pairs as _lsh_pairs,
-        minhash_signature as _minhash,
-    )
-    from shopify_youtube_etl_spark.functions.text import (
-        shingles_from_words as _shingles,
-    )
-    from shopify_youtube_etl_spark.operators.components import connected_components
-
-    ws = words(F.col("text"))
-    # spread(): the batch's tokenize/shingle/minhash work ran in 1-2
-    # tasks off the single-file scan (profiled: two ~1.3s single-task
-    # checkpoint jobs per rep); a no-op at real scale where the scan
-    # splits past core count.  Partitioning cannot change any result
-    # here (min-per-digest dedup, map-side signatures, aggregates).
-    docs_b = (
-        spread(spark, sf_dir, "documents")
-        .where(F.col("doc_id").isNotNull() & F.col("text").isNotNull())
-        .where(F.col("doc_id") >= lo)
-        .select("doc_id", "text")
-    )
-    if hi is not None:
-        docs_b = docs_b.where(F.col("doc_id") < hi)
-    bench_b = docs_b.where(F.col("doc_id") % 50 == 7)
-    corpus_b = docs_b.where(F.col("doc_id") % 50 != 7)
-
-    # ONE tokenizing pass over the batch (the report's metadata
-    # discipline applied per batch, guide §1.2): token count, quality
-    # flag, and digest are computed once and checkpointed; the stage-
-    # 1/2 census, the dedup decision, and the survivor token sums all
-    # read stored columns.  The former shape tokenized the batch three
-    # times (quality filter, survivor toks, census) — at 100 TB every
-    # extra pass over ingested bytes is real money.  Values identical
-    # by construction: same expressions, same rows.
-    meta_b = corpus_b.select(
-        "doc_id",
-        F.size(ws).cast("long").alias("nt"),
-        _funnel_quality_pred().alias("q"),
-        F.md5("text").alias("digest"),
-    ).localCheckpoint(eager=eager)
+    # The batch's ONE tokenizing pass (``_funnel_meta``): the stage-1/2
+    # census, the dedup decision and the survivor token sums all read
+    # its stored columns.
+    bench_b, corpus_b = _funnel_docs(spark, sf_dir, lo, hi)
+    meta_b = _funnel_meta(corpus_b, eager)
 
     # --- exact dedup: history wins every digest it has seen (history
     # ids precede batch ids, so min-per-digest over the union ≡ this
@@ -2500,22 +2437,14 @@ def _funnel_batch(
     # regenerate candidates only inside TOUCHED buckets (contents there
     # are identical to the full run's, so capped-bucket behavior is
     # identical too); everything else is already in the edge store.
-    shingled_b = (
-        exact_b.select("doc_id", ws.alias("wa"))
-        .where(F.size("wa") >= 3)
-        .select("doc_id", _shingles("wa", 3).alias("sh"))
-    )
-    bands_b = _lsh_bands(
-        _minhash(shingled_b, "doc_id", "sh", num_hashes=32), "doc_id",
-        num_hashes=32, bands=8,
-    )
-    union_bands = st["bands"].read().unionByName(bands_b)
-    touched = union_bands.join(
+    shingled_b = _funnel_shingled(exact_b)
+    bands_b = _funnel_bands(shingled_b)
+    touched = st["bands"].read().unionByName(bands_b).join(
         F.broadcast(bands_b.select("band_id", "band_hash").distinct()),
         ["band_id", "band_hash"],
         "left_semi",
     )
-    # Checkpointed for the same reason the full funnel checkpoints its
+    # Checkpointed for the same reason the cold funnel checkpoints its
     # pairs frame: three consumers (both cand_sh sides + the verify
     # join) would otherwise each replay the band-probe subtree.
     new_pairs = _lsh_pairs(touched, "doc_id").localCheckpoint(eager=eager)
@@ -2533,38 +2462,27 @@ def _funnel_batch(
     # text decode and the candidate tokenize twice).  The id prune is
     # the UNION of both pair endpoints; the shingled candidate frame is
     # checkpointed (candidate-sized — bounded by the LSH bucket cap)
-    # and each side is a rename of it.  Arrays identical to the former
-    # per-side computation: same expression over the same rows.
+    # and each side is a rename of it.  Every candidate has a band row,
+    # so it has ≥ 3 words and the shingle filter drops none.
     cand_ids = (
         new_pairs.select(F.col("id_a").alias("doc_id"))
         .unionByName(new_pairs.select(F.col("id_b").alias("doc_id")))
         .distinct()
     )
-    cand_shingled = (
+    cand_shingled = _funnel_shingled(
         texts.join(F.broadcast(cand_ids), "doc_id")
-        .select("doc_id", ws.alias("w2"))
-        .select("doc_id", _shingles("w2", 3).alias("csh"))
-        .localCheckpoint(eager=eager)
-    )
+    ).localCheckpoint(eager=eager)
 
-    def cand_sh(out_id: str, out_sh: str):
+    def cand_sh(id_col: str, out_sh: str) -> DataFrame:
         return cand_shingled.select(
-            F.col("doc_id").alias(out_id), F.col("csh").alias(out_sh)
+            F.col("doc_id").alias(id_col), F.col("sh").alias(out_sh)
         )
 
     # Checkpointed: the Jaccard-verify join is the batch's most
     # expensive subtree and has three consumers (the label collapse
     # here, plus the advance's emptiness probe and edge append) — same
-    # discipline as new_pairs/reps above.
-    # cand_sh sides SHUFFLE_HASH-pinned — same rationale as the
-    # full-funnel verify join (r10 hazard class).
-    verified_new = (
-        new_pairs.join(cand_sh("id_a", "sa").hint("shuffle_hash"), "id_a")
-        .join(cand_sh("id_b", "sb").hint("shuffle_hash"), "id_b")
-        .where(_jaccard(F.col("sa"), F.col("sb")) >= 0.5)
-        .select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-        .localCheckpoint(eager=eager)
-    )
+    # discipline as new_pairs/reps.
+    verified_new = _jaccard_verified(new_pairs, cand_sh).localCheckpoint(eager=eager)
     # Label-collapse: map each new edge endpoint through the persisted
     # labels (batch/unknown nodes map to themselves), drop edges that
     # collapse to self-loops, and run components over the label graph —
@@ -2597,14 +2515,9 @@ def _funnel_batch(
 
     # --- decontam IVM: Δ = benchmark shingles never seen before; only
     # postings rows matching Δ re-score history docs.
-    bench_sh_b = (
-        bench_b.select(ws.alias("bw"))
-        .where(F.size("bw") >= 3)
-        .select(F.explode(_shingles("bw", 3)).alias("s"))
-        .select(F.xxhash64("s").alias("sh_hash"))
-        .distinct()
+    delta_bench = _sh_hashes(_bench_shingles(bench_b)).join(
+        st["bench_sh"].read(), "sh_hash", "left_anti"
     )
-    delta_bench = bench_sh_b.join(st["bench_sh"].read(), "sh_hash", "left_anti")
     delta_hits = (
         st["postings"]
         .read()
@@ -2621,26 +2534,8 @@ def _funnel_batch(
             (F.col("hits") + F.coalesce("dh", F.lit(0))).alias("hits"),
         )
     )
-    full_bench = st["bench_sh"].read().unionByName(delta_bench)
-    postings_b = (
-        exact_b.select("doc_id", ws.alias("dw"))
-        .where(F.size("dw") >= 3)
-        .select("doc_id", F.explode(_shingles("dw", 3)).alias("s"))
-        .groupBy("doc_id", F.xxhash64("s").alias("sh_hash"))
-        .agg(F.count("*").alias("k"))
-    )
-    cstat_b = (
-        postings_b.join(
-            F.broadcast(full_bench.withColumn("hit", F.lit(1))), "sh_hash", "left"
-        )
-        .groupBy("doc_id")
-        .agg(
-            F.sum("k").cast("long").alias("n_sh"),
-            F.sum(F.when(F.col("hit").isNotNull(), F.col("k")).otherwise(0))
-            .cast("long")
-            .alias("hits"),
-        )
-    )
+    postings_b = _postings(shingled_b)
+    cstat_b = _cstat(postings_b, st["bench_sh"].read().unionByName(delta_bench))
     contaminated = (
         cstat_h.unionByName(cstat_b)
         .where((F.col("n_sh") > 0) & (F.col("hits") / F.col("n_sh") >= 0.2))
@@ -2655,16 +2550,13 @@ def _funnel_batch(
         "toks_b": toks_b,
         "toks_all": toks_all,
         "bands_b": bands_b,
-        "union_bands": union_bands,
         "verified_new": verified_new,
         "histlab": histlab,
         "newlab": newlab,
         "reps": reps,
         "delta_bench": delta_bench,
         "delta_hits": delta_hits,
-        "full_bench": full_bench,
         "postings_b": postings_b,
-        "cstat_h": cstat_h,
         "cstat_b": cstat_b,
         "decontam_ids": decontam_ids,
     }
@@ -2687,47 +2579,28 @@ def _funnel_stage_rows(fr: dict) -> DataFrame:
     no-op."""
     meta = fr["st"]["meta"].read()
     toks_all = fr["toks_all"]
-
-    batch_census = fr["meta_b"].select("nt", "q").agg(
-        F.count("*").alias("bn1"),
-        F.coalesce(F.sum("nt"), F.lit(0)).cast("long").alias("bt1"),
-        F.count(F.when(F.col("q"), 1)).alias("bn2"),
-        F.coalesce(F.sum(F.when(F.col("q"), F.col("nt"))), F.lit(0))
-        .cast("long")
-        .alias("bt2"),
-    )
     is_ingest = F.col("stage_name") == "ingest"
     stage12 = (
         meta.where(F.col("stage_name").isin("ingest", "quality"))
-        .join(F.broadcast(batch_census))
+        .join(F.broadcast(_funnel_census(fr["meta_b"])))
         .select(
             "stage",
             "stage_name",
-            (F.col("n_docs") + F.when(is_ingest, F.col("bn1")).otherwise(F.col("bn2")))
+            (F.col("n_docs") + F.when(is_ingest, F.col("n1")).otherwise(F.col("n2")))
             .alias("n_docs"),
             (
                 F.col("total_tokens")
-                + F.when(is_ingest, F.col("bt1")).otherwise(F.col("bt2"))
+                + F.when(is_ingest, F.col("t1")).otherwise(F.col("t2"))
             )
             .cast("long")
             .alias("total_tokens"),
         )
     )
-
-    def survivor_stage(n: int, name: str, ids: DataFrame | None) -> DataFrame:
-        src = toks_all if ids is None else ids.join(toks_all, "doc_id")
-        return src.agg(
-            F.lit(n).alias("stage"),
-            F.lit(name).alias("stage_name"),
-            F.count("*").alias("n_docs"),
-            F.coalesce(F.sum("n_tokens"), F.lit(0)).cast("long").alias("total_tokens"),
-        )
-
     return (
         stage12
-        .unionByName(survivor_stage(3, "exact_dedup", None))
-        .unionByName(survivor_stage(4, "neardup", fr["reps"]))
-        .unionByName(survivor_stage(5, "decontam", fr["decontam_ids"]))
+        .unionByName(_survivor_stage(3, "exact_dedup", toks_all, None))
+        .unionByName(_survivor_stage(4, "neardup", toks_all, fr["reps"]))
+        .unionByName(_survivor_stage(5, "decontam", toks_all, fr["decontam_ids"]))
     )
 
 
@@ -2759,8 +2632,10 @@ def _advance_funnel_state(dst: StateStore, fr: dict) -> None:
     curator does after every report, so the next batch curates against
     history-plus-this-batch instead of re-deriving it.  Every structure
     is by value the exact frame a from-scratch ``_build_funnel_state``
-    over the union slice would produce (pinned by the two-batch
-    equality test), but the WRITE is O(batch + touched segments), never
+    over the union slice would produce (pinned table by table by
+    test_funnel_advance_write_is_o_batch, whose advance over empty
+    state must equal the cold build), but the WRITE is O(batch +
+    touched segments), never
     O(state) — the ``upsert_matching`` discipline the component /
     attribution / BM25 / sketch IVM families adopted in round 8:
 
@@ -2861,8 +2736,6 @@ def incremental_funnel_two_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     crash anywhere in build/advance) is wiped and rebuilt, and the
     mid-advance crash window is additionally bounded by the advance's
     digests-first/meta-last commit order (both pinned in pytest)."""
-    from shopify_youtube_etl_spark.plans.common import table_col_max
-
     s2 = _funnel_split(spark, sf_dir)
     mx = table_col_max(spark, sf_dir, "documents", "doc_id")
     s1 = int((mx + 1) * 3 // 5) if mx is not None else 0

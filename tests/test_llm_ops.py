@@ -957,7 +957,11 @@ def test_funnel_advance_write_is_o_batch(spark, tmp_path):
     label nor re-scores a historical doc, EVERY history segment of
     EVERY state table (meta's 2-row counter aside) survives the
     advance BY NAME — the same discipline pinned for upsert_matching
-    in test_operators' merge pins."""
+    in test_operators' merge pins.
+
+    Also pins the two funnel pipelines against each other table by
+    table: the batch path advancing EMPTY state through [0, 288) must
+    land exactly the tables the cold build writes for split 288."""
     import os
 
     from shopify_youtube_etl_spark.plans import llm_text as lt
@@ -967,6 +971,23 @@ def test_funnel_advance_write_is_o_batch(spark, tmp_path):
     d = _plant_funnel_corpus(spark, tmp_path, batch1_ids=[300, 315])
     st = StateStore(spark, "funnel", d, "adv-pin")
     lt._build_funnel_state(spark, d, st, 288)
+
+    seeded = StateStore(spark, "funnel", d, "adv-pin-seeded")
+    for k in lt._FUNNEL_TABLES:
+        empty = st[k].read().limit(0)
+        if k == "meta":  # zero counters for ingest and quality
+            empty = st[k].read().select(
+                "stage", "stage_name",
+                F.lit(0).cast("long").alias("n_docs"),
+                F.lit(0).cast("long").alias("total_tokens"),
+            )
+        seeded[k].overwrite(empty)
+    lt._advance_funnel_state(seeded, lt._funnel_batch(spark, d, seeded, 0, 288))
+    for k in lt._FUNNEL_TABLES:
+        got = sorted(map(tuple, seeded[k].read().collect()))
+        want = sorted(map(tuple, st[k].read().collect()))
+        assert got == want, f"{k}: advance over empty state != cold build"
+
     pre = {
         k: {os.path.basename(s) for s in st[k].segments()}
         for k in lt._FUNNEL_TABLES

@@ -627,7 +627,7 @@ PLAN_EXEMPT = {
     "bm25_incremental_index": "table verb: postings upsert_matching merge; pinned by test_llm_ops base-segment-survival pin",
     "incremental_attribution_revenue": "table verb: attribution state upsert; pinned by test_analytics increment==rebuild pin",
     "incremental_curation_funnel": "table verb: funnel state build+probe; pinned by funnel equality + advance survival pins",
-    "curation_funnel_report": "eager: localCheckpointed funnel lineage; shuffle shape pinned by test_funnel_shuffles_once_on_user",
+    "curation_funnel_report": "eager: localCheckpointed funnel lineage; pinned by test_llm_ops test_curation_funnel_monotone_and_removes_planted_dups + funnel equality pins",
     "semantic_cluster_dedup": "eager: driver-side Lloyd iterations (bounded collects); pinned by test_llm_ops cluster pins",
     "bpe_encode_stats": "eager: BPE merge-table train collect; pinned by test_llm_ops BPE pins",
     "pagestore_stream_ingest": "streaming: availableNow waves + checkpoints; pinned by exactly-once two-wave test",
